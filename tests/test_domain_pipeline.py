@@ -184,3 +184,160 @@ def test_idempotent_partition_overwrite(spark, bronze_day_path, tmp_path):
     assert back.count() == 60
     assert partition_exists(spark, path, RUN_DATE)
     assert not partition_exists(spark, path, dt.date(1999, 1, 1))
+
+
+# -- day-file parse semantics ---------------------------------------------
+
+
+def _response(*ids):
+    return {"items": [{"id": i} for i in ids]}
+
+
+def _day_text(pairs):
+    """A day-file body from (region, response) pairs, keys in order and
+    possibly repeated (json.dumps of a dict cannot repeat a key)."""
+    import json
+
+    return "{" + ", ".join(f"{json.dumps(k)}: {json.dumps(v)}" for k, v in pairs) + "}"
+
+
+def _regions_items(df):
+    return sorted(
+        (r["region"], [i["id"] for i in r["response"]["items"]]) for r in df.collect()
+    )
+
+
+def test_day_file_repeated_region_keeps_last_value(spark, tmp_path):
+    from youtube_trending_data_pipeline_spark.sources.bronze import read_bronze_days
+
+    path = tmp_path / "2025-10-06.json"
+    path.write_text(_day_text([
+        ("QA", _response("qa-1")), ("US", _response("us-1")),
+        ("QA", _response("qa-2")),
+        # a repeat whose last value is null drops the region, like the
+        # null overwriting a JSON object field
+        ("DE", _response("de-1")), ("DE", None),
+    ]))
+    want = [("QA", ["qa-2"]), ("US", ["us-1"])]
+    assert _regions_items(read_bronze_day(spark, str(path))) == want
+    days = read_bronze_days(spark, str(tmp_path / "*.json"))
+    assert _regions_items(days) == want
+    assert {r["file_date"] for r in days.collect()} == {RUN_DATE}
+
+
+def test_day_file_ignores_unrequested_regions(spark, tmp_path):
+    path = tmp_path / "2025-10-06.json"
+    path.write_text(_day_text([
+        ("FR", _response("fr-1")), ("QA", _response("qa-1")), ("JP", _response("jp-1")),
+    ]))
+    got = read_bronze_day(spark, str(path), regions=["QA", "US"])
+    assert _regions_items(got) == [("QA", ["qa-1"])]
+
+
+def test_backfill_scan_truncated_file(spark, tmp_path):
+    import pytest
+
+    from youtube_trending_data_pipeline_spark.sources.bronze import read_bronze_days
+
+    (tmp_path / "2025-10-05.json").write_text(_day_text([("QA", _response("qa-1"))]))
+    (tmp_path / "2025-10-06.json").write_text('{"QA": {"items": [')  # truncated
+    glob = str(tmp_path / "*.json")
+    # permissive: the truncated file gives no rows, the good one is kept
+    rows = read_bronze_days(spark, glob).collect()
+    assert [(r["file_date"], r["region"]) for r in rows] == [
+        (dt.date(2025, 10, 5), "QA")
+    ]
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        read_bronze_days(spark, glob, strict=True).collect()
+
+
+def test_backfill_scan_keeps_misnamed_file_with_null_date(spark, tmp_path):
+    from youtube_trending_data_pipeline_spark.sources.bronze import read_bronze_days
+
+    (tmp_path / "2025-10-06.json").write_text(_day_text([("QA", _response("a"))]))
+    (tmp_path / "latest.json").write_text(_day_text([("US", _response("b"))]))
+    rows = read_bronze_days(spark, str(tmp_path / "*.json")).collect()
+    got = sorted((r["region"], r["file_date"]) for r in rows)
+    assert got == [("QA", RUN_DATE), ("US", None)]
+
+
+# -- daily_insights: modal category and averages ---------------------------
+
+
+def _videos(spark, rows):
+    """(region, category_id, views, likes, comments, ord) -> silver rows."""
+    return spark.createDataFrame(
+        [(r, RUN_DATE, c, v, l, m, o) for r, c, v, l, m, o in rows],
+        "region string, date date, category_id string, views_count long, "
+        "likes_count long, comments_count long, ord long",
+    )
+
+
+def test_daily_insights_mode_matches_mode_per_group_order(spark):
+    from youtube_trending_data_pipeline_spark.operators.mode import mode_per_group
+
+    videos = _videos(spark, [
+        # A: NULL ties "24" for most frequent -> NULL first
+        ("A", None, 1, 1, 1, 0), ("A", None, 1, 1, 1, 1),
+        ("A", "24", 1, 1, 1, 2), ("A", "24", 1, 1, 1, 3), ("A", "7", 1, 1, 1, 4),
+        # B: "10" ties "9" -> string order, "10" < "9"
+        ("B", "9", 1, 1, 1, 0), ("B", "10", 1, 1, 1, 1),
+        # C: a strict majority wins whatever the order
+        ("C", "3", 1, 1, 1, 0), ("C", "25", 1, 1, 1, 1), ("C", "25", 1, 1, 1, 2),
+    ])
+    got = {r["region"]: r["top_category_id"] for r in daily_insights(videos).collect()}
+    assert got == {"A": None, "B": 10, "C": 25}
+    modes = mode_per_group(videos, ["region", "date"], "category_id").collect()
+    want = {r["region"]: r["mode_category_id"] for r in modes}
+    assert {k: None if v is None else int(v) for k, v in want.items()} == got
+
+
+def test_daily_insights_mode_first_seen_with_order_col(spark):
+    from youtube_trending_data_pipeline_spark.operators.mode import mode_per_group
+
+    videos = _videos(spark, [
+        ("B", "9", 1, 1, 1, 5), ("B", "10", 1, 1, 1, 8), ("B", "10", 1, 1, 1, 6),
+        ("B", "9", 1, 1, 1, 7),
+        # a NULL category seen first wins its tie too
+        ("D", "10", 1, 1, 1, 3), ("D", None, 1, 1, 1, 1),
+    ])
+    got = daily_insights(videos, order_col="ord").collect()
+    assert {r["region"]: r["top_category_id"] for r in got} == {"B": 9, "D": None}
+    modes = mode_per_group(
+        videos, ["region", "date"], "category_id", order_col="ord"
+    ).collect()
+    assert {r["region"]: r["mode_category_id"] for r in modes} == {"B": "9", "D": None}
+
+
+def test_daily_insights_all_null_counts(spark):
+    # ANSI mode (Spark 4's default) raises on a divide by zero; a group
+    # with no non-NULL count must still give NULL averages, like avg()
+    videos = _videos(spark, [
+        ("A", "10", None, None, None, 0), ("A", "10", None, None, None, 1),
+        ("B", "10", 10, 3, None, 0), ("B", "20", None, 4, None, 1),
+    ])
+    rows = {r["region"]: r for r in daily_insights(videos).collect()}
+    a, b = rows["A"], rows["B"]
+    for m in ("views", "likes", "comments"):
+        assert a[f"total_{m}"] is None
+        assert a[f"average_{m}"] is None
+        assert a[f"highest_{m}"] is None
+    assert a["engagement_ratio"] == 0.0
+    assert (b["total_views"], b["average_views"], b["highest_views"]) == (10, 10.0, 10)
+    assert (b["total_likes"], b["average_likes"]) == (7, 3.5)
+    assert b["average_comments"] is None
+
+
+def test_partition_exists_raises_on_unreadable_table(spark, tmp_path):
+    import pytest
+
+    from youtube_trending_data_pipeline_spark.sources.tables import partition_exists
+
+    assert not partition_exists(spark, str(tmp_path / "missing"), RUN_DATE)
+    (tmp_path / "empty").mkdir()
+    assert not partition_exists(spark, str(tmp_path / "empty"), RUN_DATE)
+    junk = tmp_path / "junk"
+    junk.mkdir()
+    (junk / "part-00000.parquet").write_text("not a parquet file")
+    with pytest.raises(Exception):
+        partition_exists(spark, str(junk), RUN_DATE)

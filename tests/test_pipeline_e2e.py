@@ -298,3 +298,79 @@ def test_backfill_matches_per_day_runs(spark, tmp_path):
     # weekly report runs unchanged on the backfilled gold
     report, html = run_weekly_report(spark, b, END)
     assert [r["region"] for r in report.collect()] == ["DE", "QA", "US"]
+
+
+def test_tables_on_disk_match_declared_schemas(spark, tmp_path):
+    """Every table read passes its declared schema, so no read would
+    notice the files drifting from it: the schema inferred from the
+    files each job writes must equal the declared one."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from youtube_trending_data_pipeline_spark.pipeline import (
+        run_backfill_aggregates,
+        run_backfill_ingestion,
+    )
+    from youtube_trending_data_pipeline_spark.schemas import (
+        CHANNELS,
+        DAILY_INSIGHTS,
+        DAILY_TRENDING_VIDEOS,
+    )
+    from youtube_trending_data_pipeline_spark.sources.tables import read_table
+
+    class _StaticFetcher:
+        """Fetcher seam stub: one fixed payload, a metadata row per
+        channel. Defined here so the executors unpickle it by value."""
+
+        def __init__(self, payload):
+            self.payload = payload
+
+        def fetch_trending(self, region):
+            return self.payload.get(region)
+
+        def fetch_channels(self, channel_ids):
+            return [
+                {
+                    "id": cid,
+                    "channel_name": f"name {cid}",
+                    "country": None,
+                    "creation_date": dt.datetime(2021, 5, 1),
+                    "made_for_kids": None,
+                    "subscribers_count": None,
+                    "views_count": 100,
+                    "videos_count": None,
+                    "keywords": None,
+                }
+                for cid in channel_ids
+            ]
+
+    cfg = PipelineConfig(
+        bronze_dir=str(tmp_path / "bronze"),
+        videos_dir=str(tmp_path / "videos"),
+        channels_dir=str(tmp_path / "channels"),
+        insights_dir=str(tmp_path / "insights"),
+    )
+    (tmp_path / "bronze").mkdir()
+    (tmp_path / "bronze" / f"{END.isoformat()}.json").write_text(
+        json.dumps(make_day_json())
+    )
+    run_backfill_ingestion(spark, cfg)
+    run_backfill_aggregates(spark, cfg)
+    # first run of the fetcher seam: the channels table does not exist
+    # yet, and a declared-schema read of it still raises AnalysisException
+    with pytest.raises(AnalysisException):
+        read_table(spark, cfg.channels_dir, CHANNELS)
+    run_daily_ingestion(
+        spark, cfg, END + dt.timedelta(days=1), fetcher=_StaticFetcher(make_day_json())
+    )
+    assert spark.read.parquet(cfg.channels_dir).count() == 12
+
+    def fields(schema):
+        return sorted((f.name, f.dataType) for f in schema.fields)
+
+    for path, declared in [
+        (cfg.videos_dir, DAILY_TRENDING_VIDEOS),
+        (cfg.insights_dir, DAILY_INSIGHTS),
+        (cfg.channels_dir, CHANNELS),
+    ]:
+        assert fields(spark.read.parquet(path).schema) == fields(declared), path

@@ -740,3 +740,25 @@ def test_list_offsets_guard_rejects_int32_overflow():
     assert (off == np.array([0, 4, 8, 12], np.int32)).all()
     with pytest.raises(ValueError, match="2\\^31"):
         _list_offsets_i32((1 << 31) // 64 + 1, 64)
+    # just under the ceiling the offsets are built: the arange's own
+    # stop, (n_rows + 1) * dim = 2^31, must not overflow first
+    near = _list_offsets_i32((1 << 11) - 1, 1 << 20)
+    assert near.dtype == np.int32 and len(near) == 1 << 11
+    assert int(near[-1]) == (1 << 31) - (1 << 20)
+
+
+def test_list_matrix_rejects_null_elements():
+    """A NULL element inside an equal-length list raises a named error
+    instead of decoding to INT64_MIN."""
+    import pyarrow as pa
+    import pytest
+
+    from youtube_trending_data_pipeline_spark.operators.intlinalg import (
+        _list_matrix,
+    )
+
+    col = pa.chunked_array(
+        [pa.array([[1, None, 3], [4, 5, 6]], pa.list_(pa.int32()))]
+    )
+    with pytest.raises(ValueError, match="NULL element"):
+        _list_matrix(col, 2)

@@ -1149,7 +1149,7 @@ def f1_duration_parse(spark, sf_dir):
         "l_orderkey",
         "l_linenumber",
         "duration_str",
-        iso8601_duration_seconds(F.col("duration_str")).alias("duration_sec"),
+        iso8601_duration_seconds("duration_str").alias("duration_sec"),
     )
 
 
@@ -1595,8 +1595,8 @@ def _synthetic_silver(spark, sf_dir):
     "timestamps, likeCount absent on odd keys), written through "
     "write_bronze_day (reference day-file shape: one JSON object mapping "
     "region -> response, ing:83-91), read back with read_bronze_day's "
-    "explicit schema (no inference, multiLine, region key-presence "
-    "guard), region-demultiplexed, and flattened by the production "
+    "declared map schema (no inference, one whole-file parse, region "
+    "key-presence guard), region-demultiplexed, and flattened by the production "
     "flatten_videos — so the oracle checks the whole JSON ser/de + sink "
     "+ scan + flatten path, with the missing-statistic default (ing:"
     "170-172) observable in likes_count. Bounded: the synthetic day is "

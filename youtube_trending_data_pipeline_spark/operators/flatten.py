@@ -47,7 +47,7 @@ def flatten_videos(items: DataFrame, run_date: dt.date | Column) -> DataFrame:
         _count(F.col("item.statistics.commentCount")).alias("comments_count"),
         _count(F.col("item.statistics.likeCount")).alias("likes_count"),
         _count(F.col("item.statistics.viewCount")).alias("views_count"),
-        iso8601_duration_seconds(F.col("item.contentDetails.duration")).alias("duration"),
+        iso8601_duration_seconds("item.contentDetails.duration").alias("duration"),
         F.col("item.snippet.title").alias("title"),
         parse_naive_utc(F.col("item.snippet.publishedAt")).alias("publish_date"),
         F.col("region").alias("region"),

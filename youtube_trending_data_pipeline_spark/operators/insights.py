@@ -2,17 +2,21 @@
 
 Reference: dags/trending_daily_aggregates.py:52-111 implements group-by as
 a Python loop over ``set(df["region"])`` with boolean-mask partitions and
-per-group pandas reductions. The Spark formulation is one
-``groupBy("region","date")`` — partial (map-side) aggregation then a
-single hash exchange on the group key; the mode sub-aggregate reuses the
-same shuffle key so AQE can pipeline the two.
+per-group pandas reductions. The Spark formulation is two aggregates: a
+(region, date, category_id) partial aggregate that carries each metric's
+sum, non-null count and maximum plus the category's row count, then one
+(region, date) aggregate that folds those partials and picks the modal
+category with ``min_by`` — no separate mode count, window or join.
 
 Semantics faithfully reproduced:
-* averages rounded to 2 dp (agg:69,72,75)
+* averages rounded to 2 dp (agg:69,72,75): the exact integer sum over
+  the non-NULL count, which equals ``avg``'s double-accumulated sum while
+  sums stay below 2^53; NULL when a group has no non-NULL value
 * engagement_ratio = (likes + 2*comments)/views * 1000, 0 when views==0,
   UNROUNDED (agg:79-84)
 * top_category_id = per-group modal category_id cast to int (agg:87-88);
-  tie-break documented in operators/mode.py
+  tie-break as in operators/mode.py (``cnt DESC, value ASC`` with NULL
+  first, or first-seen with ``order_col``)
 """
 
 from __future__ import annotations
@@ -20,40 +24,53 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from youtube_trending_data_pipeline_spark.operators.mode import mode_per_group
+_METRICS = ("views", "likes", "comments")
 
 
 def daily_insights(videos: DataFrame, order_col: str | None = None) -> DataFrame:
     """silver ``daily_trending_videos`` -> gold ``daily_insights``."""
-    base = videos.groupBy("region", "date").agg(
-        F.sum("views_count").alias("total_views"),
-        F.round(F.avg("views_count"), 2).alias("average_views"),
-        F.max("views_count").alias("highest_views"),
-        F.sum("likes_count").alias("total_likes"),
-        F.round(F.avg("likes_count"), 2).alias("average_likes"),
-        F.max("likes_count").alias("highest_likes"),
-        F.sum("comments_count").alias("total_comments"),
-        F.round(F.avg("comments_count"), 2).alias("average_comments"),
-        F.max("comments_count").alias("highest_comments"),
+    partial = [F.count(F.lit(1)).alias("cnt")]
+    for m in _METRICS:
+        c = f"{m}_count"
+        partial += [
+            F.sum(c).alias(f"sum_{m}"),
+            F.count(c).alias(f"n_{m}"),
+            F.max(c).alias(f"max_{m}"),
+        ]
+    # modal category: least (-cnt, [first seen,] category_id); a NULL
+    # struct field sorts first, so a NULL category wins a tie
+    mode_key = [-F.col("cnt")]
+    if order_col is not None:
+        partial.append(F.min(order_col).alias("first_seen"))
+        mode_key.append(F.col("first_seen"))
+    mode_key.append(F.col("category_id"))
+    per_category = videos.groupBy("region", "date", "category_id").agg(*partial)
+
+    final = []
+    for m in _METRICS:
+        total = F.sum(f"sum_{m}")
+        final += [
+            total.alias(f"total_{m}"),
+            # try_divide: a group without one non-NULL value averages
+            # to NULL, like avg(), instead of raising under ANSI mode
+            F.round(F.try_divide(total, F.sum(f"n_{m}")), 2).alias(f"average_{m}"),
+            F.max(f"max_{m}").alias(f"highest_{m}"),
+        ]
+    final.append(
+        F.min_by("category_id", F.struct(*mode_key)).alias("top_category_id")
     )
-    base = base.withColumn(
-        "engagement_ratio",
+    gold = per_category.groupBy("region", "date").agg(*final)
+    return gold.select(
+        "region",
+        "date",
+        *[f"{p}_{m}" for m in _METRICS for p in ("total", "average", "highest")],
         F.when(
             F.col("total_views") > 0,
             (F.col("total_likes") + 2 * F.col("total_comments"))
             / F.col("total_views")
             * 1000.0,
-        ).otherwise(F.lit(0.0)),
+        )
+        .otherwise(F.lit(0.0))
+        .alias("engagement_ratio"),
+        F.col("top_category_id").cast("long"),
     )
-    top_cat = mode_per_group(
-        videos,
-        ["region", "date"],
-        "category_id",
-        order_col=order_col,
-        out_col="top_category_id_str",
-    ).select(
-        "region",
-        "date",
-        F.col("top_category_id_str").cast("long").alias("top_category_id"),
-    )
-    return base.join(top_cat, ["region", "date"], "left")

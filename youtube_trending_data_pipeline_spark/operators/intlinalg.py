@@ -33,13 +33,22 @@ def _list_matrix(col, n_rows):
     the flat reshape would silently misalign a ragged group whose
     total element count happens to divide n_rows (the pandas
     np.array(list(...)) path failed loudly as an object array), and an
-    all-empty group would raise an opaque reshape error."""
+    all-empty group would raise an opaque reshape error.
+
+    A NULL element inside a list raises too: numpy would read it as NaN
+    and cast it to an arbitrary int64 (INT64_MIN in practice), silently
+    corrupting every dot product it enters."""
     import numpy as np
 
     arr = col.combine_chunks()
-    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(
-        np.int64, copy=False
-    )
+    values = arr.flatten()
+    if values.null_count:
+        raise ValueError(
+            f"vector group holds {values.null_count} NULL element(s) "
+            "inside its lists — NULL vector elements must be filtered "
+            "or filled upstream"
+        )
+    flat = values.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     if n_rows == 0:
         return flat.reshape(0, 0)
     lengths = arr.value_lengths().fill_null(0).to_numpy(
@@ -74,7 +83,9 @@ def _list_offsets_i32(n_rows, dim):
             "so groups shrink (each group's output must stay under "
             "2^31 list elements)"
         )
-    return np.arange(0, (n_rows + 1) * dim, dim, dtype=np.int32)
+    # built in int64, then narrowed: an int32 arange stop of
+    # (n_rows + 1) * dim can itself overflow just under the guard
+    return np.arange(0, total + dim, dim, dtype=np.int64).astype(np.int32)
 
 # Masks self-pairs so they sort LAST under (dot DESC, id ASC): smaller
 # than any legitimate dot (those are >= -6.4e9) yet small enough in

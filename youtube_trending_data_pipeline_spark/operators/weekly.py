@@ -62,11 +62,17 @@ def weekly_insights(
             "total_likes_for_top_category",
             F.format_number("total_likes_for_top_category", 0),
         )
-    # deterministic row order (reference relies on dict insertion order, wk:62)
-    return agg.select(
-        "region",
-        "top_category",
-        "total_views_for_top_category",
-        "total_likes_for_top_category",
-        "average_engagement_ratio",
-    ).orderBy("region")
+    # deterministic row order (reference relies on dict insertion order,
+    # wk:62). One row per region: a single-partition sort, not a global
+    # orderBy, whose range partitioning starts a sampling job.
+    return (
+        agg.select(
+            "region",
+            "top_category",
+            "total_views_for_top_category",
+            "total_likes_for_top_category",
+            "average_engagement_ratio",
+        )
+        .coalesce(1)
+        .sortWithinPartitions("region")
+    )

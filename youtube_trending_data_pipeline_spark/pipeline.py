@@ -1,7 +1,9 @@
 """End-to-end pipeline jobs — the engine's equivalent of the reference's
 three Airflow DAGs (SURVEY §3). Each job is a plain function over Parquet
 tables: Airflow's branch/XCom machinery is replaced by idempotent dynamic
-partition overwrite and table-to-table handoff.
+partition overwrite and table-to-table handoff. Every table read passes
+the table's declared schema (schemas.py), so no job pays a
+schema-inference pass.
 
 | reference DAG | here |
 |---|---|
@@ -28,8 +30,14 @@ from youtube_trending_data_pipeline_spark.operators.flatten import flatten_video
 from youtube_trending_data_pipeline_spark.operators.insights import daily_insights
 from youtube_trending_data_pipeline_spark.operators.weekly import weekly_insights
 from youtube_trending_data_pipeline_spark.report.html import render_weekly_html
+from youtube_trending_data_pipeline_spark.schemas import (
+    CHANNELS,
+    DAILY_INSIGHTS,
+    DAILY_TRENDING_VIDEOS,
+)
 from youtube_trending_data_pipeline_spark.sources.bronze import (
     read_bronze_day,
+    read_bronze_days,
     region_items,
 )
 from youtube_trending_data_pipeline_spark.sources.tables import (
@@ -72,8 +80,6 @@ def run_daily_ingestion(
     unless an explicit ``fetched_channels`` frame overrides it. Without a
     fetcher, the bronze day-file is read from ``cfg.bronze_dir`` directly.
     """
-    from youtube_trending_data_pipeline_spark.schemas import CHANNELS
-
     day_path = f"{cfg.bronze_dir}/{run_date.isoformat()}.json"
     if fetcher is not None:
         from youtube_trending_data_pipeline_spark.sources.bronze import (
@@ -96,7 +102,7 @@ def run_daily_ingestion(
         )
 
         try:
-            known = read_table(spark, cfg.channels_dir)
+            known = read_table(spark, cfg.channels_dir, CHANNELS)
         except AnalysisException:  # first run: channels table doesn't exist yet
             known = spark.createDataFrame([], CHANNELS)
         # the metadata fetch runs executor-side over the anti-joined id
@@ -108,12 +114,14 @@ def run_daily_ingestion(
             fetched_channels = channels_from_fetcher(ids_df, fetcher)
     if fetched_channels is not None:
         try:
-            known = read_table(spark, cfg.channels_dir)
+            known = read_table(spark, cfg.channels_dir, CHANNELS)
         except AnalysisException:  # path-not-found only; real failures raise
             known = fetched_channels.limit(0)
         fresh = new_channels(silver, known, fetched_channels)
         fresh.write.mode("append").parquet(cfg.channels_dir)
-    return spark.read.parquet(cfg.videos_dir).where(f"date = '{run_date}'")
+    return read_table(spark, cfg.videos_dir, DAILY_TRENDING_VIDEOS).where(
+        f"date = '{run_date}'"
+    )
 
 
 def run_backfill_ingestion(
@@ -137,10 +145,6 @@ def run_backfill_ingestion(
     the whole silver load is one scan + one partitioned write, no
     shuffle at all.
     """
-    from youtube_trending_data_pipeline_spark.sources.bronze import (
-        read_bronze_days,
-    )
-
     bronze = read_bronze_days(
         spark, f"{cfg.bronze_dir}/*.json", cfg.regions, strict=strict
     )
@@ -149,7 +153,7 @@ def run_backfill_ingestion(
     )
     silver = flatten_videos(items, F.col("file_date"))
     overwrite_date_partition(silver, cfg.videos_dir)
-    return spark.read.parquet(cfg.videos_dir)
+    return read_table(spark, cfg.videos_dir, DAILY_TRENDING_VIDEOS)
 
 
 def run_backfill_aggregates(
@@ -157,22 +161,27 @@ def run_backfill_aggregates(
 ) -> DataFrame:
     """Whole-range silver -> gold in ONE job: ``daily_insights`` already
     groups by (region, date), so the multi-year rollup is the same
-    operator over every date partition at once — one partial-aggregated
-    shuffle on the (region, date) grain instead of one job per day."""
-    videos = read_table(spark, cfg.videos_dir)
+    operator over every date partition at once — partial-aggregated
+    shuffles on the (region, date, category) and (region, date) grains
+    instead of one job per day."""
+    videos = read_table(spark, cfg.videos_dir, DAILY_TRENDING_VIDEOS)
     gold = daily_insights(videos)
     overwrite_date_partition(gold, cfg.insights_dir)
-    return spark.read.parquet(cfg.insights_dir)
+    return read_table(spark, cfg.insights_dir, DAILY_INSIGHTS)
 
 
 def run_daily_aggregates(
     spark: SparkSession, cfg: PipelineConfig, run_date: dt.date
 ) -> DataFrame:
     """silver videos (one date partition) -> gold ``daily_insights``."""
-    videos = read_table(spark, cfg.videos_dir).where(f"date = '{run_date}'")
+    videos = read_table(spark, cfg.videos_dir, DAILY_TRENDING_VIDEOS).where(
+        f"date = '{run_date}'"
+    )
     gold = daily_insights(videos)
     overwrite_date_partition(gold, cfg.insights_dir)
-    return spark.read.parquet(cfg.insights_dir).where(f"date = '{run_date}'")
+    return read_table(spark, cfg.insights_dir, DAILY_INSIGHTS).where(
+        f"date = '{run_date}'"
+    )
 
 
 def run_weekly_report(
@@ -189,7 +198,7 @@ def run_weekly_report(
     (weekly_report.py:90-109) — e-mail, file audit trail, or anything else
     implementing ``send``. Rendering is unchanged either way.
     """
-    insights = read_table(spark, cfg.insights_dir)
+    insights = read_table(spark, cfg.insights_dir, DAILY_INSIGHTS)
     report = weekly_insights(insights, end_date, formatted=True)
     html = render_weekly_html(report)
     if sender is not None:

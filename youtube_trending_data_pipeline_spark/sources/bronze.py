@@ -2,20 +2,58 @@
 
 Reference shape (SURVEY.md §1.2): one JSON object per day mapping region
 code -> a verbatim YouTube ``videoListResponse``
-(dags/trending_daily_ingestion.py:76-91). The engine reads it with an
-explicit schema — no inference pass over 100 TB of JSON — and immediately
-demultiplexes to one row per (region, item): the reference's nested
-``for region: for video:`` loops (ing:154-160) become two explodes that
-Catalyst parallelizes per input split.
+(dags/trending_daily_ingestion.py:76-91). The engine reads each day-file
+once as whole-file text and parses it with the declared
+``schemas.RAW_DAY`` map schema — no inference pass over 100 TB of JSON,
+and no per-region column: unknown region keys need no schema change
+(SURVEY §1.4). :func:`demultiplex` then turns the map into one row per
+requested region, and :func:`region_items` into one row per (region,
+item): the reference's nested ``for region: for video:`` loops
+(ing:154-160) become two explodes that Catalyst parallelizes per file.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StructType
 
-from youtube_trending_data_pipeline_spark.schemas import VIDEO_LIST_RESPONSE
+from youtube_trending_data_pipeline_spark.schemas import RAW_DAY
+
+DEFAULT_REGIONS = ["QA", "US", "DE"]  # the reference's DEFAULT_REGIONS (ing:29)
+
+
+def _sql_string(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def demultiplex(
+    days: DataFrame, regions: list[str], strict: bool = False, keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """Whole-file day-file text (column ``value``) -> (*keep, region, response).
+
+    Each file is parsed once as a ``RAW_DAY`` region -> response map. A
+    region yields a row only if it was requested and its response is not
+    null — the reference's ``if region in today_json`` guard (ing:155,
+    P7). A region key repeated within one file keeps its LAST value, as a
+    JSON object read does (the map parse itself keeps every duplicate).
+
+    ``strict=False`` parses PERMISSIVE: a malformed day-file parses to a
+    null map and yields no rows — ingestion survives one bad file out of
+    thousands. ``strict=True`` uses FAILFAST for backfills where silent
+    data loss is worse than an abort.
+    """
+    mode = "FAILFAST" if strict else "PERMISSIVE"
+    parsed = days.select(
+        *keep, F.from_json("value", RAW_DAY, {"mode": mode}).alias("day")
+    )
+    wanted = ", ".join(_sql_string(r) for r in regions)
+    last_wanted = (
+        "filter(map_entries(day), (e, i) -> e.value IS NOT NULL"
+        f" AND e.key IN ({wanted})"
+        " AND NOT array_contains(slice(map_keys(day), i + 2, size(day)), e.key))"
+    )
+    return parsed.selectExpr(*keep, f"inline({last_wanted}) AS (region, response)")
 
 
 def read_bronze_day(
@@ -26,40 +64,13 @@ def read_bronze_day(
 ) -> DataFrame:
     """Read day-file(s) at ``path`` -> columns (region, response).
 
-    The top-level object maps region -> response, so the file is read with
-    every requested region as an optional struct field, then unpivoted with
-    a generator expression. Absent regions produce no rows — the semantics
-    of the reference's ``if region in today_json`` guard (ing:155, P7).
-
-    ``regions`` defaults to the reference's DEFAULT_REGIONS (ing:29); at
-    scale pass the full region list — the scan stays one pass regardless.
-
-    ``strict=False`` (default) reads PERMISSIVE: a malformed day-file
-    yields null region structs, which the demultiplex drops — ingestion
-    survives one bad file out of thousands. ``strict=True`` uses FAILFAST
-    for backfills where silent data loss is worse than an abort.
+    Absent regions produce no rows (see :func:`demultiplex`, which also
+    describes ``strict``). ``regions`` defaults to the reference's
+    DEFAULT_REGIONS (ing:29); at scale pass the full region list — the
+    scan stays one parse per file regardless.
     """
-    regions = regions or ["QA", "US", "DE"]
-    schema = StructType([StructField(r, VIDEO_LIST_RESPONSE) for r in regions])
-    raw = (
-        spark.read.schema(schema)
-        .option("multiLine", True)
-        .option("mode", "FAILFAST" if strict else "PERMISSIVE")
-        .json(path)
-    )
-    # region demultiplex (SURVEY §2 J4): map-of-structs -> rows, dropping
-    # regions that are absent from the file.
-    stacked = raw.select(
-        F.explode(
-            F.map_filter(
-                F.create_map(
-                    *[x for r in regions for x in (F.lit(r), F.col(r))]
-                ),
-                lambda _, v: v.isNotNull(),
-            )
-        ).alias("region", "response")
-    )
-    return stacked
+    days = spark.read.text(path, wholetext=True)
+    return demultiplex(days, regions or DEFAULT_REGIONS, strict)
 
 
 def read_bronze_days(
@@ -83,37 +94,18 @@ def read_bronze_days(
     date partition rather than being dropped silently, so a misnamed
     file is visible in the output instead of vanishing (the pipeline
     itself always writes date-named files; this only bites foreign
-    files placed in the bronze directory).
+    files placed in the bronze directory). The date is parsed with
+    ``try_to_date``: under ANSI mode ``to_date`` of the empty match raises.
 
     Output: (file_date, region, response).
     """
-    regions = regions or ["QA", "US", "DE"]
-    schema = StructType([StructField(r, VIDEO_LIST_RESPONSE) for r in regions])
-    raw = (
-        spark.read.schema(schema)
-        .option("multiLine", True)
-        .option("mode", "FAILFAST" if strict else "PERMISSIVE")
-        .json(path_glob)
-        .withColumn(
-            "file_date",
-            F.to_date(
-                F.regexp_extract(
-                    F.input_file_name(), r"(\d{4}-\d{2}-\d{2})\.json", 1
-                )
-            ),
-        )
-    )
-    return raw.select(
+    days = spark.read.text(path_glob, wholetext=True).withColumn(
         "file_date",
-        F.explode(
-            F.map_filter(
-                F.create_map(
-                    *[x for r in regions for x in (F.lit(r), F.col(r))]
-                ),
-                lambda _, v: v.isNotNull(),
-            )
-        ).alias("region", "response"),
+        F.try_to_date(
+            F.regexp_extract(F.input_file_name(), r"(\d{4}-\d{2}-\d{2})\.json", 1)
+        ),
     )
+    return demultiplex(days, regions or DEFAULT_REGIONS, strict, keep=("file_date",))
 
 
 def region_items(bronze: DataFrame) -> DataFrame:

@@ -24,12 +24,21 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def read_table(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """Parquet table at ``path``. Pass the table's declared ``schema``
+    (schemas.py) to skip the footer-reading job that schema inference
+    starts on every read. A missing path raises ``AnalysisException``
+    either way."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def append_partitioned(df: DataFrame, path: str, partition_col: str = "date") -> None:
@@ -62,9 +71,13 @@ def overwrite_date_partition(
 def partition_exists(spark: SparkSession, path: str, date: dt.date) -> bool:
     """Existence probe (S8: ``SELECT id ... LIMIT 1``) — kept for parity with
     the reference's branch operator; partition pruning makes it O(one
-    partition's footer), and ``limit(1).isEmpty()`` short-circuits."""
+    partition's footer), and ``limit(1).isEmpty()`` short-circuits.
+
+    Only a missing or empty table reads as absent (``AnalysisException``:
+    path not found, nothing to infer a schema from); an unreadable table
+    raises instead of passing for a missing partition."""
     try:
         df = spark.read.parquet(path)
-    except Exception:
+    except AnalysisException:
         return False
     return not df.where(F.col("date") == F.lit(date)).limit(1).isEmpty()

@@ -18,10 +18,13 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructField, StructType
 
 from youtube_trending_data_pipeline_spark.operators.flatten import flatten_videos
-from youtube_trending_data_pipeline_spark.schemas import VIDEO_LIST_RESPONSE
+from youtube_trending_data_pipeline_spark.sources.bronze import (
+    DEFAULT_REGIONS,
+    demultiplex,
+    region_items,
+)
 
 
 def stream_bronze_to_silver(
@@ -37,24 +40,15 @@ def stream_bronze_to_silver(
     ``availableNow`` processes everything currently in the directory then
     stops — the streaming-native daily batch. The checkpoint makes re-runs
     exactly-once (files already processed are skipped), subsuming the
-    reference's branch-skip idempotency (C1).
+    reference's branch-skip idempotency (C1). Each new day-file is read
+    as whole-file text and parsed once as a ``schemas.RAW_DAY`` map by
+    the same :func:`~youtube_trending_data_pipeline_spark.sources.bronze.demultiplex`
+    as the batch readers.
     """
-    regions = regions or ["QA", "US", "DE"]
-    schema = StructType([StructField(r, VIDEO_LIST_RESPONSE) for r in regions])
-    raw = (
-        spark.readStream.schema(schema)
-        .option("multiLine", True)
-        .option("maxFilesPerTrigger", 64)
-        .json(bronze_dir)
+    days = spark.readStream.option("maxFilesPerTrigger", 64).text(
+        bronze_dir, wholetext=True
     )
-    stacked = raw.select(
-        F.explode(
-            F.map_filter(
-                F.create_map(*[x for r in regions for x in (F.lit(r), F.col(r))]),
-                lambda _, v: v.isNotNull(),
-            )
-        ).alias("region", "response")
-    ).select("region", F.explode("response.items").alias("item"))
+    stacked = region_items(demultiplex(days, regions or DEFAULT_REGIONS))
     silver = flatten_videos(stacked, run_date)
     return (
         silver.writeStream.format("parquet")
