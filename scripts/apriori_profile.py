@@ -22,8 +22,9 @@ from pyspark.sql import SparkSession, functions as F
 
 from youtube_trending_data_pipeline_spark import catalog_analysis as ca
 from youtube_trending_data_pipeline_spark.catalog import t
-from youtube_trending_data_pipeline_spark.catalog_analysis import (
-    _AP_PAIR_PPM, _AP_TRIPLE_PPM, _toks_a,
+from youtube_trending_data_pipeline_spark.catalog_analysis import _toks_a
+from youtube_trending_data_pipeline_spark.catalog_analysis_mining import (
+    _AP_PAIR_PPM, _AP_TRIPLE_PPM,
 )
 
 

@@ -516,7 +516,7 @@ def test_spatial_join_matches_bruteforce(spark):
     """Python brute force over the same hash-derived points: the grid
     join finds exactly the within-radius pairs — including pairs whose
     points sit in DIFFERENT grid cells."""
-    import youtube_trending_data_pipeline_spark.catalog_analysis as ca
+    import youtube_trending_data_pipeline_spark.catalog_analysis_mining as ca
     from youtube_trending_data_pipeline_spark.catalog import t as _t
 
     SF01 = "/root/testdata/sf0.01"
@@ -900,7 +900,7 @@ def test_max_coverage_crafted_greedy_order(spark):
 def test_backfill_ranges_cover_exactly_the_missing_days(spark):
     """Union of emitted ranges == the set of days absent between each
     type's first and last ingested day."""
-    import youtube_trending_data_pipeline_spark.catalog_analysis as ca
+    import youtube_trending_data_pipeline_spark.catalog_analysis_mining as ca
     from youtube_trending_data_pipeline_spark.catalog import t as _t
 
     present: dict[str, set] = {}
@@ -1037,7 +1037,7 @@ def test_overdispersion_vmr_reference(spark):
 def test_apriori_downward_closure(spark):
     """Every reported triple's three face-pairs are themselves frequent
     (downward closure), and support never exceeds any face support."""
-    import youtube_trending_data_pipeline_spark.catalog_analysis as ca
+    import youtube_trending_data_pipeline_spark.catalog_analysis_mining as ca
     from youtube_trending_data_pipeline_spark.catalog import t as _t
 
     docs = [
@@ -1068,7 +1068,7 @@ def test_dbscan_labels_consistent_with_spatial_pairs(spark):
     radius; everything else noise."""
     import hashlib
 
-    import youtube_trending_data_pipeline_spark.catalog_analysis as ca
+    import youtube_trending_data_pipeline_spark.catalog_analysis_mining as ca
     from youtube_trending_data_pipeline_spark.catalog import t as _t
 
     SF01 = "/root/testdata/sf0.01"
@@ -1450,7 +1450,7 @@ def test_lis_matches_patience_reference(spark):
     over the same capped series."""
     import bisect
 
-    import youtube_trending_data_pipeline_spark.catalog_analysis as ca
+    import youtube_trending_data_pipeline_spark.catalog_analysis_series as ca
     from youtube_trending_data_pipeline_spark.catalog import t as _t
 
     rows = (
@@ -1488,7 +1488,7 @@ def test_knapsack_optimal_dominates_greedy_and_matches_bruteforce(spark):
     the same items."""
     from itertools import combinations
 
-    import youtube_trending_data_pipeline_spark.catalog_analysis as ca
+    import youtube_trending_data_pipeline_spark.catalog_analysis_series as ca
     from youtube_trending_data_pipeline_spark.catalog import t as _t
 
     docs = sorted(
@@ -1822,7 +1822,7 @@ def test_tv_distance_extremes(spark):
 def test_sorted_neighborhood_candidate_bound(spark):
     """Candidate count is exactly sum over i of min(w-1, n-i) — linear
     in n — and hash-overlap matches are a subset of window matches."""
-    import youtube_trending_data_pipeline_spark.catalog_analysis as ca
+    import youtube_trending_data_pipeline_spark.catalog_analysis_series as ca
 
     r = QUERIES["er_sorted_neighborhood"].fn(spark, SF).collect()[0]
     n = 150  # customers at sf0.001

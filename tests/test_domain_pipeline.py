@@ -140,6 +140,68 @@ def test_weekly_formatted_output(spark, bronze_day_path):
     assert "," in row["total_views_for_top_category"]  # thousands separators (F9)
 
 
+def _gold(spark, rows):
+    """daily_insights rows from (region, days before RUN_DATE, total_views,
+    total_likes, engagement_ratio, top_category_id)."""
+    from youtube_trending_data_pipeline_spark.schemas import DAILY_INSIGHTS
+
+    return spark.createDataFrame(
+        [
+            (r, RUN_DATE - dt.timedelta(days=back), v, 0.0, 0, lk, 0.0, 0, 0, 0.0, 0, er, cat)
+            for r, back, v, lk, er, cat in rows
+        ],
+        DAILY_INSIGHTS,
+    )
+
+
+def test_weekly_insights_sums_only_the_modal_rows(spark):
+    from youtube_trending_data_pipeline_spark.operators.mode import mode_per_group
+    from youtube_trending_data_pipeline_spark.operators.weekly import weekly_window
+    from youtube_trending_data_pipeline_spark.plans.explain import physical_plan
+
+    gold = _gold(spark, [
+        # E: category 1 is the mode; category 2's rows stay out of the sums,
+        # and its rows before the window would have made it the mode
+        ("E", 0, 10, 1, 1.0, 1), ("E", 1, 20, 2, 3.0, 1), ("E", 2, 99, 9, 9.0, 2),
+        ("E", 7, 500, 50, 50.0, 2), ("E", 8, 500, 50, 50.0, 2),
+        # A: a NULL mode selects no row -> 0, 0 and a NULL mean
+        ("A", 0, 10, 1, 1.0, None), ("A", 1, 20, 2, 2.0, None), ("A", 2, 30, 3, 3.0, 9),
+        # B: NULL ties 9 -> NULL wins
+        ("B", 0, 10, 1, 1.0, None), ("B", 1, 20, 2, 2.0, 9),
+        # C: 10 ties 9 -> the smaller value wins
+        ("C", 0, 10, 1, 1.0, 10), ("C", 1, 20, 2, 2.0, 9),
+        # D: the mean skips a NULL ratio
+        ("D", 0, 10, 1, None, 5), ("D", 1, 20, 2, 4.0, 5), ("D", 2, 5, 5, 7.0, 6),
+    ])
+    report = weekly_insights(gold, RUN_DATE, formatted=False)
+    got = {r["region"]: tuple(r)[1:] for r in report.collect()}
+    assert got == {
+        "A": (None, 0, 0, None),
+        "B": (None, 0, 0, None),
+        "C": (9, 20, 2, 2.0),
+        "D": (5, 30, 3, 4.0),
+        "E": (1, 30, 3, 2.0),
+    }
+    modes = mode_per_group(weekly_window(gold, RUN_DATE), ["region"], "top_category_id")
+    assert {r["region"]: r["mode_top_category_id"] for r in modes.collect()} == {
+        k: v[0] for k, v in got.items()
+    }
+    plan = physical_plan(report)
+    assert "Window" not in plan and "BroadcastHashJoin" not in plan, plan
+
+
+def test_weekly_insights_null_sums(spark):
+    # a sum over modal rows whose values are all NULL is 0 when the week
+    # has other rows and NULL when every row is modal, as sum(when(..))
+    # over the week gives
+    gold = _gold(spark, [
+        ("F", 0, None, None, None, 3), ("F", 1, None, 4, None, 3),
+        ("G", 0, None, None, 1.0, 3), ("G", 1, None, None, 2.0, 3), ("G", 2, 7, 7, 3.0, 4),
+    ])
+    got = {r["region"]: tuple(r)[1:] for r in weekly_insights(gold, RUN_DATE, formatted=False).collect()}
+    assert got == {"F": (3, None, 4, None), "G": (3, 0, 0, 1.5)}
+
+
 def test_new_channels_anti_join(spark, bronze_day_path):
     from youtube_trending_data_pipeline_spark.operators.channels import (
         new_channel_ids,

@@ -50,3 +50,78 @@ def test_every_registry_query_documented_in_survey():
         n for n in entry.queries() if f"`{n}`" not in survey and n not in survey
     )
     assert not missing, missing
+
+
+# The driver-window rule (registry_order): FIRST, then entries with no row
+# or a failed latest row, then the least recently checked; ties by name.
+
+
+def _row(ok=True, err=None):
+    return {"rows_match": ok, "schema_match": True, "hash_match": ok, "err": err}
+
+
+def test_driver_order_deterministic_and_complete():
+    from youtube_trending_data_pipeline_spark import catalog
+    from youtube_trending_data_pipeline_spark.registry_order import (
+        FIRST,
+        correctness_rounds,
+        order_for_driver,
+    )
+
+    names = list(catalog.all_queries())
+    assert len(names) == len(set(names)) == len(catalog.QUERIES)
+    assert set(FIRST) <= set(names)
+    rounds = correctness_rounds()
+    assert names == order_for_driver(reversed(names), rounds)
+    assert names == order_for_driver(sorted(catalog.QUERIES), rounds)
+
+
+def test_driver_window_leads_with_first_then_stalest():
+    from youtube_trending_data_pipeline_spark import catalog
+    from youtube_trending_data_pipeline_spark.registry_order import (
+        FIRST,
+        correctness_rounds,
+    )
+
+    names = list(catalog.all_queries())
+    assert set(names[: len(FIRST)]) == set(FIRST)
+    rounds = correctness_rounds()
+    last = {name: rnd for rnd in sorted(rounds) for name in rounds[rnd]}
+    window = [last.get(n, 0) for n in names[len(FIRST) : 50]]
+    rest = [last.get(n, 0) for n in names[50:]]
+    assert window == sorted(window)
+    assert max(window) <= min(rest)
+
+
+def test_driver_order_synthetic_rounds():
+    from youtube_trending_data_pipeline_spark.registry_order import order_for_driver
+
+    rounds = {
+        1: {"a": _row(), "b": _row(), "e": _row(ok=False)},
+        2: {"c": _row(), "e": _row(), "zz_not_registered": _row()},
+        10: {"a": _row()},
+    }
+    names = ["a", "b", "c", "d", "e"]
+    # "d" has no row; round 10 sorts after round 2 (numeric, not text);
+    # "e" failed once but its latest row passed
+    assert order_for_driver(names, rounds) == ["d", "b", "c", "e", "a"]
+    # a failing latest row (mismatch or error) joins the rows-less
+    # entries at the front, however recent
+    rounds[11] = {"a": _row(ok=False), "c": _row(err="boom")}
+    assert order_for_driver(names, rounds) == ["d", "a", "c", "b", "e"]
+
+
+def test_driver_window_moves_with_a_new_round():
+    from youtube_trending_data_pipeline_spark import catalog
+    from youtube_trending_data_pipeline_spark.registry_order import (
+        FIRST,
+        correctness_rounds,
+        order_for_driver,
+    )
+
+    rounds = dict(correctness_rounds())
+    before = order_for_driver(catalog.QUERIES, rounds)[:50]
+    rounds[max(rounds) + 1] = {n: _row() for n in before}
+    after = order_for_driver(catalog.QUERIES, rounds)[:50]
+    assert after[: len(FIRST)] == before[: len(FIRST)]
+    assert not set(after[len(FIRST) :]) & set(before)

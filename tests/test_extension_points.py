@@ -123,101 +123,48 @@ def test_identifier_clause_binds_table_names(spark):
         ).collect()
 
 
-# one sentinel per registering module, in canonical _load_extensions()
-# registration order (first entry registered by each)
-_ORDER_SENTINELS = [
-    "s5_scan_project",  # catalog (base)
-    "dedup_exact",  # catalog_ext
-    "q3_shipping_priority",  # catalog_tpch
-    "passage_dedup",  # catalog_corpus
-    "keyword_tag",  # catalog_curation
-    "graph_kcore_mutual_knn",  # catalog_analysis
-    "encoding_rle_audit",  # catalog_analysis_mining (batch 2)
-    "text_kwic_concordance",  # catalog_analysis_series (batch 3)
-    "eval_auc_exact",  # catalog_quality
-]
-
-_DIRECT_IMPORT_SAFE_MODULES = [
+_DIRECT_IMPORT_MODULES = [
     "catalog_ext",
     "catalog_tpch",
     "catalog_corpus",
     "catalog_curation",
     "catalog_analysis",
+    "catalog_analysis_mining",
     "catalog_analysis_series",
     "catalog_quality",
 ]
 
 
-@pytest.mark.parametrize("first_module", _DIRECT_IMPORT_SAFE_MODULES)
+@pytest.mark.parametrize("first_module", _DIRECT_IMPORT_MODULES)
 def test_any_direct_import_keeps_canonical_order(first_module):
-    """VERDICT r10 item 6: the driver's correctness-window rotation
-    depends on QUERIES' registration order, so importing ANY catalog
-    extension module directly FIRST (executor-side kernel unpickling
-    does exactly that) must still produce the canonical order — each
-    module now imports its predecessor at the top, forming a chain that
-    makes every entry point equivalent to _load_extensions(). Runs in a
-    fresh interpreter so this process's import state can't mask it."""
+    """Importing any catalog module first (executor-side kernel
+    unpickling does) and then ``_load_extensions()`` registers every
+    entry, and ``all_queries()`` orders them the same way: the order
+    comes from the CORRECTNESS files and entry names, not from which
+    module registered first. Runs in a fresh interpreter so this
+    process's import state can't mask it."""
+    import json
+    import os
     import subprocess
     import sys
 
+    from youtube_trending_data_pipeline_spark import catalog
+
     code = (
+        "import json\n"
         f"import youtube_trending_data_pipeline_spark.{first_module}\n"
-        "from youtube_trending_data_pipeline_spark.catalog import "
-        "QUERIES, _load_extensions\n"
-        "_load_extensions()\n"
-        "names = list(QUERIES)\n"
-        f"sent = {_ORDER_SENTINELS!r}\n"
-        "idx = [names.index(s) for s in sent]\n"
-        "assert idx == sorted(idx), list(zip(sent, idx))\n"
-        "print('ORDER-OK')\n"
+        "from youtube_trending_data_pipeline_spark import catalog\n"
+        "catalog._load_extensions()\n"
+        "print(json.dumps([sorted(catalog.QUERIES), list(catalog.all_queries())]))\n"
     )
     out = subprocess.run(
         [sys.executable, "-c", code],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
-    assert "ORDER-OK" in out.stdout, (out.stdout, out.stderr[-800:])
-
-
-def test_continuation_module_direct_import_order():
-    """ADVICE r9: direct import of catalog_analysis_mining FIRST — the
-    one path that genuinely reorders (the parent's tail import of batch
-    2 becomes a circular no-op) — must fail LOUDLY at the parent's tail
-    order assert instead of silently reordering. Fresh interpreter."""
-    import subprocess
-    import sys
-
-    bad_code = (
-        "try:\n"
-        "    import youtube_trending_data_pipeline_spark."
-        "catalog_analysis_mining\n"
-        "    print('NO-RAISE')\n"
-        "except ImportError as e:\n"
-        "    print('RAISED' if 'registration order' in str(e)"
-        " else 'WRONG: ' + str(e))\n"
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", bad_code],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
-    )
-    assert "RAISED" in out.stdout, (out.stdout, out.stderr[-800:])
-
-
-def test_continuation_registration_order_preserved():
-    """Parent-first import (the only allowed path) keeps the historical
-    registration order: ...analysis entries, then batch 2 (mining),
-    then batch 3 (series)."""
-    from youtube_trending_data_pipeline_spark.catalog import (
-        QUERIES,
-        _load_extensions,
-    )
-
-    _load_extensions()
-    names = list(QUERIES)
-    # last pre-split analysis entry < first mining entry < first series
-    assert names.index("consistent_hash_rebalance") < names.index(
-        "encoding_rle_audit"
-    ) < names.index("text_kwic_concordance")
+    assert out.returncode == 0, out.stderr[-800:]
+    registered, ordered = json.loads(out.stdout.splitlines()[-1])
+    canonical = list(catalog.all_queries())
+    assert registered == sorted(canonical)
+    assert ordered == canonical

@@ -374,3 +374,44 @@ def test_tables_on_disk_match_declared_schemas(spark, tmp_path):
         (cfg.channels_dir, CHANNELS),
     ]:
         assert fields(spark.read.parquet(path).schema) == fields(declared), path
+
+
+def test_daily_ingestion_reads_channels_table_once_it_exists(spark, tmp_path):
+    """The first run finds no channels table and starts one; a channels
+    path that exists but is not Parquet fails the job instead of reading
+    as an empty table."""
+    import pytest
+
+    from youtube_trending_data_pipeline_spark.schemas import CHANNELS
+    from youtube_trending_data_pipeline_spark.sources.tables import table_exists
+
+    cfg = PipelineConfig(
+        bronze_dir=str(tmp_path / "bronze"),
+        videos_dir=str(tmp_path / "videos"),
+        channels_dir=str(tmp_path / "channels"),
+        insights_dir=str(tmp_path / "insights"),
+    )
+    (tmp_path / "bronze").mkdir()
+    (tmp_path / "bronze" / f"{END.isoformat()}.json").write_text(
+        json.dumps(make_day_json())
+    )
+    fetched = spark.createDataFrame(
+        [
+            (f"ch-{r}-{i}", f"name {i}", "QA", dt.datetime(2021, 5, 1), False, 1, 2, 3, "k")
+            for r in ("QA", "US", "DE")
+            for i in range(4)
+        ],
+        CHANNELS,
+    )
+    assert not table_exists(spark, cfg.channels_dir)
+    run_daily_ingestion(spark, cfg, END, fetched_channels=fetched)
+    assert table_exists(spark, cfg.channels_dir)
+    run_daily_ingestion(spark, cfg, END, fetched_channels=fetched)
+    assert spark.read.parquet(cfg.channels_dir).count() == 12
+
+    junk = tmp_path / "junk"
+    junk.mkdir()
+    (junk / "part-00000.parquet").write_text("not a parquet file")
+    cfg.channels_dir = str(junk)
+    with pytest.raises(Exception):
+        run_daily_ingestion(spark, cfg, END, fetched_channels=fetched)

@@ -85,14 +85,17 @@ def test_partition_pruning_on_date_layout(spark, tmp_path):
 def test_mode_avoids_raw_row_shuffle(spark):
     """mode_per_group shuffles counted groups, not raw rows: the first
     aggregation must be partial (map-side) before any exchange."""
-    df = QUERIES["a6_mode_per_group"].fn(spark, SF)
-    plan = formatted_plan(df)
-    first_exchange = plan.find("Exchange")
-    first_agg = plan.find("HashAggregate")
-    assert first_agg != -1 and first_exchange != -1
-    # plan prints leaves last: partial agg should appear *after* exchange
-    # in text order (deeper in the tree) — i.e. below the shuffle
-    assert "partial_count" in plan or "count" in plan
+    import re
+
+    plan = formatted_plan(QUERIES["a6_mode_per_group"].fn(spark, SF))
+    # the formatted plan numbers operators from the leaves up, then gives
+    # each one a "(N) Name" block of details
+    nodes = re.findall(r"^\((\d+)\) (\w+)(.*?)(?=^\(\d+\) |\Z)", plan, re.M | re.S)
+    first_exchange = min(int(n) for n, name, _ in nodes if name == "Exchange")
+    assert any(
+        int(n) < first_exchange and name == "HashAggregate" and "partial_count(" in body
+        for n, name, body in nodes
+    ), plan
 
 
 def test_no_python_udf_in_core_queries(spark):

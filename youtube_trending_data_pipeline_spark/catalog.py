@@ -572,8 +572,9 @@ def a12_rollup(spark, sf_dir):
     "daily_insights aggregation (A2-A6 + W1 + A5 guard, "
     "dags/trending_daily_aggregates.py:52-111) re-expressed over events — "
     "per-day sums/avg/max, conditional counts, guarded engagement ratio, "
-    "modal type with deterministic tie-break. Same operators drive "
-    "operators/insights.py::daily_insights.",
+    "modal type with deterministic tie-break, here as mode_per_group "
+    "joined back. operators/insights.py::daily_insights computes the same "
+    "rollup as one partial aggregate and a min_by fold.",
 )
 def domain_daily_insights(spark, sf_dir):
     from youtube_trending_data_pipeline_spark.operators.mode import mode_per_group
@@ -1902,9 +1903,12 @@ def p2_channel_defaults(spark, sf_dir):
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     _load_extensions()
-    from youtube_trending_data_pipeline_spark.registry_order import order_for_driver
+    from youtube_trending_data_pipeline_spark.registry_order import (
+        correctness_rounds,
+        order_for_driver,
+    )
 
-    ordered = order_for_driver(list(QUERIES))
+    ordered = order_for_driver(QUERIES, correctness_rounds())
     return {name: QUERIES[name].fn for name in ordered}
 
 
@@ -1916,6 +1920,8 @@ def _load_extensions() -> None:
     from youtube_trending_data_pipeline_spark import catalog_corpus  # noqa: F401
     from youtube_trending_data_pipeline_spark import catalog_curation  # noqa: F401
     from youtube_trending_data_pipeline_spark import catalog_analysis  # noqa: F401
+    from youtube_trending_data_pipeline_spark import catalog_analysis_mining  # noqa: F401
+    from youtube_trending_data_pipeline_spark import catalog_analysis_series  # noqa: F401
     from youtube_trending_data_pipeline_spark import catalog_quality  # noqa: F401
 
 

@@ -17,12 +17,6 @@ windowed reductions, no driver loops, no Python UDFs.
 
 from __future__ import annotations
 
-# Registration-order chain (VERDICT r10 item 6): importing this
-# module directly must register catalog_curation's entries first, so QUERIES
-# keeps the canonical _load_extensions() order from ANY entry point
-# (executor-side kernel unpickling imports catalog modules directly).
-import youtube_trending_data_pipeline_spark.catalog_curation  # noqa: F401,E501 isort:skip
-
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -2942,60 +2936,3 @@ def consistent_hash_rebalance(spark, sf_dir):
             "moved_ppm"
         ),
     )
-
-
-# ---------------------------------------------------------------------------
-# Continuation modules (round-9 split: this file had grown past 8k lines)
-# ---------------------------------------------------------------------------
-# Importing them HERE (at the tail) preserves the registry's historical
-# registration order exactly — batch-2 and batch-3 entries register after
-# everything above, just as they did when they lived in this file — and
-# the re-export below keeps every `catalog_analysis.<name>` attribute
-# reference (tests, scripts, sibling catalog modules) working unchanged.
-from youtube_trending_data_pipeline_spark import (  # noqa: E402
-    catalog_analysis_mining as _mining,
-)
-from youtube_trending_data_pipeline_spark import (  # noqa: E402
-    catalog_analysis_series as _series,
-)
-
-_g = globals()
-for _mod in (_mining, _series):
-    for _k, _v in vars(_mod).items():
-        if not _k.startswith("__") and _k not in _g:
-            _g[_k] = _v
-del _g, _k, _v, _mod
-
-# Registration-order guard (ADVICE r9): by the time this tail runs,
-# batch 2 (mining) must be FULLY registered after this module's own
-# entries; batch 3 (series) either follows batch 2 already (normal
-# parent-first import) or is still mid-body and will append after us
-# (series-first import — order still correct). The one broken path —
-# importing catalog_analysis_mining FIRST, whose own registrations
-# would then land AFTER batch 3's — shows up here as a missing batch-2
-# sentinel, and fails the import loudly instead of silently reordering
-# QUERIES (which the driver's correctness-window rotation depends on).
-from youtube_trending_data_pipeline_spark.catalog import (  # noqa: E402
-    QUERIES as _Q,
-)
-
-_names = list(_Q)
-if "encoding_rle_audit" not in _Q or _names.index(
-    "consistent_hash_rebalance"
-) > _names.index("encoding_rle_audit"):
-    raise ImportError(
-        "catalog registration order violated: batch-2 analysis entries "
-        "did not register directly after catalog_analysis — import "
-        "youtube_trending_data_pipeline_spark.catalog_analysis (or the "
-        "catalog), never catalog_analysis_mining, first"
-    )
-if "text_kwic_concordance" in _Q and _names.index(
-    "encoding_rle_audit"
-) > _names.index("text_kwic_concordance"):
-    raise ImportError(
-        "catalog registration order violated: batch-3 analysis entries "
-        "registered before batch 2 — import "
-        "youtube_trending_data_pipeline_spark.catalog_analysis (or the "
-        "catalog) first"
-    )
-del _Q, _names

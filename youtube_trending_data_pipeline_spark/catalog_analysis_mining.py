@@ -3,32 +3,17 @@
 Exact-median/skew/encoding audits, grid-blocked spatial join and
 DBSCAN, Apriori itemsets, PQ recall, MATCH_RECOGNIZE, weighted-median
 UDAF, RFM, and the Sobel/ZCR/motion multimodal kernels.
-Split out of catalog_analysis.py in round 9 (the file had grown past
-judge-reviewable size); entries are UNCHANGED and registration order is
-preserved — catalog_analysis imports this module at its tail, so
-`QUERIES` ordering, driver windows, and every `catalog_analysis.<name>`
-attribute reference (tests, scripts) keep working via the re-export
-shim there.
+Split out of catalog_analysis.py, whose shared constants and helpers it
+imports; ``catalog._load_extensions`` imports it after catalog_analysis.
 """
 
 from __future__ import annotations
 
-# ADVICE r9: this continuation module is registration-order-sensitive —
-# batch-2 entries must register after catalog_analysis and BEFORE batch
-# 3. Initializing the parent FIRST makes a direct import take the
-# circular path where this module's own body (and its registrations)
-# resumes only after the parent — and therefore batch 3 — completed,
-# which WOULD reorder QUERIES; the parent's tail ORDER ASSERT catches
-# exactly that and fails the import loudly instead of letting the
-# reorder ship silently. (A hard raise here is not an option: executor-
-# side kernel unpickling imports continuation modules directly.)
-import youtube_trending_data_pipeline_spark.catalog_analysis  # noqa: F401,E501 isort:skip
+from pyspark.sql import Window as W  # noqa: F401
+from pyspark.sql import functions as F
 
-from pyspark.sql import Window as W  # noqa: E402,F401
-from pyspark.sql import functions as F  # noqa: E402
-
-from youtube_trending_data_pipeline_spark.catalog import register, t  # noqa: E402
-from youtube_trending_data_pipeline_spark.catalog_analysis import (  # noqa: E402,F401
+from youtube_trending_data_pipeline_spark.catalog import register, t
+from youtube_trending_data_pipeline_spark.catalog_analysis import (  # noqa: F401
     _ER_SHIFT_C,
     _H32_DUCK,
     _H32_SPARK,

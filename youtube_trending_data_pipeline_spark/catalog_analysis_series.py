@@ -4,33 +4,17 @@ KWIC, seasonal/Markov/Haar series analysis, AMS-F2/FM sketches,
 LIS/knapsack DP audits, rich-club, ER clusters, Huffman/Shannon code
 audits, cohort jackknife, and the deterministic integer-Lloyd
 k-means + oracle-backed IVF family.
-Split out of catalog_analysis.py in round 9 (the file had grown past
-judge-reviewable size); entries are UNCHANGED and registration order is
-preserved — catalog_analysis imports this module at its tail, so
-`QUERIES` ordering, driver windows, and every `catalog_analysis.<name>`
-attribute reference (tests, scripts) keep working via the re-export
-shim there.
+Split out of catalog_analysis.py, whose shared constants and helpers it
+imports; ``catalog._load_extensions`` imports it after catalog_analysis.
 """
 
 from __future__ import annotations
 
-# ADVICE r9: this continuation module is registration-order-sensitive —
-# batch-3 entries must register AFTER catalog_analysis and batch 2.
-# Initializing the parent FIRST preserves that order on ANY import path
-# (executor-side kernel unpickling imports this module directly, so a
-# hard raise is not an option): the parent's tail import of this module
-# binds the partially-initialized module object, the parent completes
-# (registering batch 2), and this body then continues and registers
-# batch 3 last. The parent's tail ORDER ASSERT is the loud guard for
-# the one genuinely broken path (importing catalog_analysis_mining
-# first).
-import youtube_trending_data_pipeline_spark.catalog_analysis  # noqa: F401,E501 isort:skip
+from pyspark.sql import Window as W  # noqa: F401
+from pyspark.sql import functions as F
 
-from pyspark.sql import Window as W  # noqa: E402,F401
-from pyspark.sql import functions as F  # noqa: E402
-
-from youtube_trending_data_pipeline_spark.catalog import register, t  # noqa: E402
-from youtube_trending_data_pipeline_spark.catalog_analysis import (  # noqa: E402,F401
+from youtube_trending_data_pipeline_spark.catalog import register, t
+from youtube_trending_data_pipeline_spark.catalog_analysis import (  # noqa: F401
     _ABL_MIN_TOK,
     _ER_BAND_C,
     _ER_CLOSE_C,

@@ -23,12 +23,6 @@ shuffles, no driver loops).
 
 from __future__ import annotations
 
-# Registration-order chain (VERDICT r10 item 6): importing this
-# module directly must register catalog_corpus's entries first, so QUERIES
-# keeps the canonical _load_extensions() order from ANY entry point
-# (executor-side kernel unpickling imports catalog modules directly).
-import youtube_trending_data_pipeline_spark.catalog_corpus  # noqa: F401,E501 isort:skip
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Window as W

@@ -28,12 +28,6 @@ spines, broadcast dims, map-side HOFs, no driver loops.
 
 from __future__ import annotations
 
-# Registration-order chain (VERDICT r10 item 6): importing this
-# module directly must register catalog_analysis's entries first, so QUERIES
-# keeps the canonical _load_extensions() order from ANY entry point
-# (executor-side kernel unpickling imports catalog modules directly).
-import youtube_trending_data_pipeline_spark.catalog_analysis  # noqa: F401,E501 isort:skip
-
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 

@@ -18,12 +18,6 @@ order.  See ``catalog.cents``.
 
 from __future__ import annotations
 
-# Registration-order chain (VERDICT r10 item 6): importing this
-# module directly must register catalog_ext's entries first, so QUERIES
-# keeps the canonical _load_extensions() order from ANY entry point
-# (executor-side kernel unpickling imports catalog modules directly).
-import youtube_trending_data_pipeline_spark.catalog_ext  # noqa: F401,E501 isort:skip
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 

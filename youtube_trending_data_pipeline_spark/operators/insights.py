@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from youtube_trending_data_pipeline_spark.operators.mode import mode_key
+
 _METRICS = ("views", "likes", "comments")
 
 
@@ -37,13 +39,10 @@ def daily_insights(videos: DataFrame, order_col: str | None = None) -> DataFrame
             F.count(c).alias(f"n_{m}"),
             F.max(c).alias(f"max_{m}"),
         ]
-    # modal category: least (-cnt, [first seen,] category_id); a NULL
-    # struct field sorts first, so a NULL category wins a tie
-    mode_key = [-F.col("cnt")]
+    first_seen = None
     if order_col is not None:
         partial.append(F.min(order_col).alias("first_seen"))
-        mode_key.append(F.col("first_seen"))
-    mode_key.append(F.col("category_id"))
+        first_seen = F.col("first_seen")
     per_category = videos.groupBy("region", "date", "category_id").agg(*partial)
 
     final = []
@@ -57,7 +56,9 @@ def daily_insights(videos: DataFrame, order_col: str | None = None) -> DataFrame
             F.max(f"max_{m}").alias(f"highest_{m}"),
         ]
     final.append(
-        F.min_by("category_id", F.struct(*mode_key)).alias("top_category_id")
+        F.min_by(
+            "category_id", mode_key(F.col("cnt"), F.col("category_id"), first_seen)
+        ).alias("top_category_id")
     )
     gold = per_category.groupBy("region", "date").agg(*final)
     return gold.select(

@@ -16,15 +16,26 @@ distributed requires an ingest ordinal. This operator supports both:
   ingest); ties break on ``min(order_col)``.
 
 One shuffle on (group, value) for the count, then a size-(distinct values)
-window — never a shuffle of raw rows to a single node.
+window — never a shuffle of raw rows to a single node. Aggregates that
+already count per (group, value) pick the same mode with ``min_by`` over
+:func:`mode_key` instead, with no window.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def mode_key(cnt: Column, value: Column, first_seen: Column | None = None) -> Column:
+    """Key whose least value is the mode among (group, value) partials:
+    ``min_by(value, mode_key(cnt, value))`` gives ``mode_per_group``'s
+    answer — count descending, then first seen, then value ascending. A
+    NULL struct field sorts first, so a NULL value wins a tie."""
+    tie = [value] if first_seen is None else [first_seen, value]
+    return F.struct(-cnt, *tie)
 
 
 def mode_per_group(

@@ -6,9 +6,10 @@ the window (wk:36), (2) sums/avg restricted to rows whose
 ``top_category_id`` equals that mode (wk:39-41), thousands-formatted
 strings for the totals and a 2-dp-rounded mean for the ratio.
 
-Spark shape: range-pruned scan -> mode_per_group -> broadcast join back
-(the mode side is one row per region — tiny) -> conditional aggregates via
-``sum(when(...))``; equivalently a semi-join (J2). One shuffle total.
+Spark shape: range-pruned scan -> (region, top_category_id) partial
+aggregate (row count, the two sums, the mean ratio) -> (region) aggregate
+that picks the modal category's partial with ``min_by`` over
+``mode.mode_key``. Two exchanges of partials, no join and no window.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from youtube_trending_data_pipeline_spark.operators.mode import mode_per_group
+from youtube_trending_data_pipeline_spark.operators.mode import mode_key
 
 
 def weekly_window(insights: DataFrame, end_date: dt.date) -> DataFrame:
@@ -40,19 +41,34 @@ def weekly_insights(
     numeric types for downstream querying.
     """
     week = weekly_window(insights, end_date)
-    top = mode_per_group(week, ["region"], "top_category_id", out_col="top_category")
-    joined = week.join(F.broadcast(top), "region")
-    is_top = F.col("top_category_id") == F.col("top_category")
-    agg = joined.groupBy("region", "top_category").agg(
-        F.sum(F.when(is_top, F.col("total_views")).otherwise(F.lit(0))).alias(
-            "total_views_for_top_category"
+    per_category = week.groupBy("region", "top_category_id").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.sum("total_views").alias("views"),
+        F.sum("total_likes").alias("likes"),
+        F.avg("engagement_ratio").alias("ratio"),
+    )
+    top = F.struct("top_category_id", "cnt", "views", "likes", "ratio")
+    mode = per_category.groupBy("region").agg(
+        F.min_by(top, mode_key(F.col("cnt"), F.col("top_category_id"))).alias("top"),
+        F.sum("cnt").alias("rows"),
+    )
+    # the reference sums over rows whose category equals the mode: a NULL
+    # mode matches none (0, 0, NULL mean), and a sum is NULL only when
+    # every row of the week is a mode row with a NULL value
+    in_mode = F.col("top.top_category_id").isNotNull()
+    outside = F.when(F.col("rows") > F.col("top.cnt"), F.lit(0))
+
+    def mode_sum(c):
+        return F.when(in_mode, F.coalesce(F.col(f"top.{c}"), outside)).otherwise(0)
+
+    agg = mode.select(
+        "region",
+        F.col("top.top_category_id").alias("top_category"),
+        mode_sum("views").alias("total_views_for_top_category"),
+        mode_sum("likes").alias("total_likes_for_top_category"),
+        F.round(F.when(in_mode, F.col("top.ratio")), 2).alias(
+            "average_engagement_ratio"
         ),
-        F.sum(F.when(is_top, F.col("total_likes")).otherwise(F.lit(0))).alias(
-            "total_likes_for_top_category"
-        ),
-        F.round(
-            F.avg(F.when(is_top, F.col("engagement_ratio"))), 2
-        ).alias("average_engagement_ratio"),
     )
     if formatted:
         agg = agg.withColumn(
@@ -65,14 +81,4 @@ def weekly_insights(
     # deterministic row order (reference relies on dict insertion order,
     # wk:62). One row per region: a single-partition sort, not a global
     # orderBy, whose range partitioning starts a sampling job.
-    return (
-        agg.select(
-            "region",
-            "top_category",
-            "total_views_for_top_category",
-            "total_likes_for_top_category",
-            "average_engagement_ratio",
-        )
-        .coalesce(1)
-        .sortWithinPartitions("region")
-    )
+    return agg.coalesce(1).sortWithinPartitions("region")

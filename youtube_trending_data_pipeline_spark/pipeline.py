@@ -20,8 +20,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark.errors import AnalysisException
-
 from youtube_trending_data_pipeline_spark.operators.channels import (
     new_channel_ids,
     new_channels,
@@ -44,6 +42,7 @@ from youtube_trending_data_pipeline_spark.sources.tables import (
     append_partitioned,
     overwrite_date_partition,
     read_table,
+    table_exists,
 )
 
 
@@ -96,29 +95,28 @@ def run_daily_ingestion(
         bronze = read_bronze_day(spark, day_path, cfg.regions)
     silver = flatten_videos(region_items(bronze), run_date)
     overwrite_date_partition(silver, cfg.videos_dir)
-    if fetched_channels is None and fetcher is not None:
-        from youtube_trending_data_pipeline_spark.sources.fetchers import (
-            channels_from_fetcher,
-        )
-
-        try:
+    if fetched_channels is not None or fetcher is not None:
+        # one read of the channels table; on the first run it does not
+        # exist yet, and any other read failure raises
+        if table_exists(spark, cfg.channels_dir):
             known = read_table(spark, cfg.channels_dir, CHANNELS)
-        except AnalysisException:  # first run: channels table doesn't exist yet
+        else:
             known = spark.createDataFrame([], CHANNELS)
-        # the metadata fetch runs executor-side over the anti-joined id
-        # frame in bounded batches (the reference loops the ids on the
-        # driver, ing:135-138 — unbounded there on a first-run backfill;
-        # here no id list ever lands on the driver)
-        ids_df = new_channel_ids(silver, known)
-        if not ids_df.isEmpty():
-            fetched_channels = channels_from_fetcher(ids_df, fetcher)
-    if fetched_channels is not None:
-        try:
-            known = read_table(spark, cfg.channels_dir, CHANNELS)
-        except AnalysisException:  # path-not-found only; real failures raise
-            known = fetched_channels.limit(0)
-        fresh = new_channels(silver, known, fetched_channels)
-        fresh.write.mode("append").parquet(cfg.channels_dir)
+        if fetched_channels is None:
+            from youtube_trending_data_pipeline_spark.sources.fetchers import (
+                channels_from_fetcher,
+            )
+
+            # the metadata fetch runs executor-side over the anti-joined id
+            # frame in bounded batches (the reference loops the ids on the
+            # driver, ing:135-138 — unbounded there on a first-run backfill;
+            # here no id list ever lands on the driver)
+            ids_df = new_channel_ids(silver, known)
+            if not ids_df.isEmpty():
+                fetched_channels = channels_from_fetcher(ids_df, fetcher)
+        if fetched_channels is not None:
+            fresh = new_channels(silver, known, fetched_channels)
+            fresh.write.mode("append").parquet(cfg.channels_dir)
     return read_table(spark, cfg.videos_dir, DAILY_TRENDING_VIDEOS).where(
         f"date = '{run_date}'"
     )

@@ -1,611 +1,40 @@
-"""Deterministic ordering of the query registry for driver verification.
+"""Order of the query registry for the driver's correctness window.
 
-The external correctness gate checks the first 50 entries of
-``all_queries()`` per round (registration order).  To get every catalog
-entry at least one driver-verified CORRECTNESS row, we rotate: queries
-that already have a driver row from a previous round sort *after*
-queries that don't, and within the unchecked set a priority list (the
-judge-named TPC-H adaptations and corpus-prep operators) leads.
-
-``DRIVER_VERIFIED`` accumulates per round; append the keys of each new
-CORRECTNESS_r{N}.json after the driver runs so the next round's window
-covers fresh entries.  Ordering is pure bookkeeping — it never changes
-which queries exist or what they compute.
-"""
+The driver checks the first 50 entries of ``all_queries()`` each round and
+writes ``CORRECTNESS_r<N>.json`` beside the package. ``FIRST`` leads, then
+entries with no row or a failed latest row, then the least recently checked.
+Ties break by name, so registration order does not matter."""
 
 from __future__ import annotations
 
-# Keys present in CORRECTNESS_r01.json (driver gate, round 1).
-DRIVER_VERIFIED_R01 = [
-    "s5_scan_project", "s6_scan_filter_eq", "s7_scan_range",
-    "s8_existence_probe", "p6_in_set", "p1_nested_extract",
-    "j1_anti_join", "j2_semi_join", "j3_multiway_join",
-    "j4_explode_tokens", "a1_distinct", "q1_pricing_summary",
-    "a5_derived_guard", "a6_mode_per_group", "a8_a9_conditional_agg",
-    "a10_count_distinct", "a12_rollup", "domain_daily_insights",
-    "w_rank_lag_running", "w2_trailing_window", "w_rank_suite",
-    "w3_weekly_rollup", "l_topk_per_group", "l_global_topk",
-    "l_global_sort", "u1_union_all", "u2_except_intersect",
-    "j5_outer_join", "j6_asof_join", "j7_range_join", "sessionize",
-    "skew_salted_agg", "a13_cube", "a14_approx_distinct",
-    "f1_duration_parse", "f_datetime", "f9_format_number",
-    "f_string_funcs", "a15_percentiles", "a16_string_agg", "a17_pivot",
-    "f_math_funcs", "f_array_funcs", "f_conditional_null", "a18_having",
-    "f_string_suite", "f_date_suite", "dedup_exact",
-    "dedup_minhash_lsh", "dedup_simhash",
-]
+import json
+import re
+from functools import cache
+from pathlib import Path
 
-# Keys present in CORRECTNESS_r02.json AND CORRECTNESS_r03.json (identical
-# sets: round 3 produced no new work commits, so the window never moved).
-DRIVER_VERIFIED_R02_R03 = [
-    "q2_min_cost_supplier", "q3_shipping_priority", "q4_order_priority",
-    "q5_local_supplier_volume", "q6_forecast_revenue", "q7_volume_shipping",
-    "q8_market_share", "q9_product_type_profit", "q10_returned_items",
-    "q11_important_parts", "q12_priority_class_counts",
-    "q13_customer_distribution", "q14_promo_revenue_share",
-    "q15_top_supplier", "q16_supplier_part_counts",
-    "q17_small_quantity_revenue", "q18_large_volume_customer",
-    "q19_disjunctive_predicates", "q20_excess_shipment_suppliers",
-    "q21_waiting_suppliers", "q22_dormant_customers", "sample_hash_split",
-    "doc_chunk_overlap", "pack_sequences_linear", "dedup_components",
-    "contamination_check", "dedup_ngram_jaccard",
-    "funnel_view_click_purchase", "retention_cohorts", "dedup_levenshtein",
-    "dedup_embedding_cosine", "sim_bruteforce_topk", "sim_lsh_topk",
-    "sim_ivf_topk", "clean_corpus_pipeline", "sim_label_centroids",
-    "text_stats", "text_langid", "text_token_bpe", "sample_stratified",
-    "grouped_zscore", "text_fingerprint", "multimodal_image_features",
-    "stream_windowed_counts", "f_json_funcs", "f_variant_funcs",
-    "cdc_latest_per_key", "a20_argmax", "a21_stats_moments",
-    "f_bitwise_funcs",
-]
-
-# Keys present in CORRECTNESS_r04.json (driver gate, round 4).  Includes the
-# four red rows (a23_collect_set, inverted_index, u3_unpivot,
-# j8_null_safe_join) — those are forced back into the round-5 window via
-# PRIORITY_UNCHECKED below, which outranks membership here.
-DRIVER_VERIFIED_R04 = [
-    "pack_sequences_linear", "multimodal_image_features", "w_forward_fill",
-    "resample_daily", "a22_histogram", "j6b_asof_forward", "j4b_posexplode",
-    "f_map_funcs", "f_array_hof", "a23_collect_set", "u3_unpivot",
-    "j8_null_safe_join", "j4c_explode_outer", "f_try_arith", "a24_regr_fit",
-    "dedup_components_star", "dedup_keep_best", "sim_range_search",
-    "r1_recursive_spine", "winsorize_doc_lengths", "scd2_build",
-    "inverted_index", "activity_islands", "profile_table", "snapshot_diff",
-    "hopping_window_counts", "dedup_incremental", "text_redact_pii",
-    "text_repetition_score", "corpus_mix_resample", "a25_equidepth_histogram",
-    "sample_per_group_topk", "twap_per_user", "event_transition_matrix",
-    "a26_median_abs_deviation", "w_distinct_over_window",
-    "sub_not_in_nullable", "pseudonymize_keys", "stream_stateful_engagement",
-    "l_topk_with_ties", "w_ratio_to_report", "a27_pivot_multi_measure",
-    "sub_scalar_in_select", "token_freq_of_freq", "sub_scalar_above_avg",
-    "sub_correlated_min_per_group", "a19_grouping_sets",
-    "w_range_frame_sliding", "sub_not_exists", "j9_lateral_topk",
-]
-
-# Keys present in CORRECTNESS_r05.json (driver gate, round 5).  49/50 fully
-# green; `embedding_pca_project` was the one `no_oracle` rows-only row — it
-# gets a sign-canonicalized oracle in round 6 and re-enters the window via
-# PRIORITY_UNCHECKED below.
-DRIVER_VERIFIED_R05 = [
-    "a23_collect_set", "u3_unpivot", "j8_null_safe_join", "inverted_index",
-    "graph_pagerank", "text_bm25_score", "multimodal_audio_features",
-    "multimodal_video_frames", "sim_ivf_pivot_topk", "w_rolling_median",
-    "heavy_hitters_tokens", "dq_expectations", "embedding_quantize_int8",
-    "corpus_shuffle_shards", "stream_session_windows", "stream_interval_join",
-    "stream_dedup_keys", "sim_lsh_topk", "sample_stratified",
-    "stream_windowed_counts", "dedup_minhash_lsh", "dedup_simhash",
-    "a14_approx_distinct", "s3_bronze_roundtrip", "f2_timestamp_parse",
-    "p2_channel_defaults", "embedding_gram_matrix", "token_skipgram_pairs",
-    "text_nfc_normalize", "merge_upsert", "ngram_lm_counts",
-    "quality_filter_audit", "embedding_pca_project",
-    "stream_upsert_materialize", "url_domain_stats", "passage_dedup",
-    "text_tfidf_topk", "cms_heavy_hitters", "graph_triangle_count",
-    "zorder_layout_stats", "lm_bigram_doc_score", "bpe_merge_step",
-    "semdedup_keepers", "tokenize_to_ids", "sim_knn_classify",
-    "stream_static_enrich", "j10_salted_skew_join", "ngram_novelty_score",
-    "keyword_tag", "token_pmi",
-]
-
-# Keys present in CORRECTNESS_r06.json (driver gate, round 6): 50/50 green
-# (rows + schema + hash, zero err).
-DRIVER_VERIFIED_R06 = [
-    "attribution_last_touch", "cdc_chunk_dedup",
-    "contrastive_triplet_mining", "conversation_render",
-    "corpus_merkle_tree", "dedup_cluster_size_histogram",
-    "dedup_minhash_jaccard_est", "domain_quota_sample",
-    "embedding_pca_project", "embedding_pq_encode", "eval_knn_confusion",
-    "eval_mrr", "eval_pr_curve", "ewma_user_value", "f_collation_compare",
-    "f_sql_pipe_syntax", "f_sql_udf_inline", "f_xml_funcs",
-    "fim_transform", "gdpr_delete_propagation", "graph_bfs_distances",
-    "graph_hits", "graph_label_propagation", "interleave_image_text",
-    "j11_interval_overlap_join", "j6c_asof_tolerance",
-    "lang_mismatch_audit", "multimodal_audio_silence_trim",
-    "multimodal_av_sync_audit", "multimodal_image_dhash_dedup",
-    "multimodal_image_histogram", "multimodal_image_resize",
-    "multimodal_video_scene_cuts", "pack_attention_spans",
-    "preference_pair_assembly", "retrieval_hybrid_rrf",
-    "s1_datasource_roundtrip", "sample_weighted_topk", "sft_render_masked",
-    "sim_ivfadc_topk", "sim_pq_adc_topk", "sketch_kmv_distinct",
-    "span_corruption_t5", "split_decontaminated_train",
-    "stream_sliding_window_counts", "text_winnow_fingerprints",
-    "token_cooccurrence_pairs", "token_gini_diversity",
-    "ts_resample_ohlc", "w_pattern_v_shape",
-]
-
-# Keys present in CORRECTNESS_r07.json (driver gate, round 7): 50/50 green
-# (rows + schema + hash, zero err).  Window was 9 pinned (6 new/changed
-# round-7 entries + 3 graph entries whose oracles changed with the
-# bounded mutual-kNN build) + 41 tier-2 never-checked entries.
-DRIVER_VERIFIED_R07 = [
-    "s2_channels_roundtrip", "report_html_hash",
-    "graph_mutual_knn_recall_audit", "graph_kcore_mutual_knn",
-    "graph_ktruss_mutual_knn", "graph_rich_club", "dsir_importance_select",
-    "kmeans_lloyd_integer", "boilerplate_shingle_mark",
-    "w_pareto_concentration", "basket_brand_lift",
-    "graph_personalized_pagerank", "embedding_health_audit",
-    "crawl_politeness_schedule", "multimodal_content_sniff",
-    "multimodal_transcode_roundtrip", "eval_bleu_components",
-    "sketch_bloom_probe", "detokenize_roundtrip",
-    "embedding_matryoshka_truncate", "tokenizer_fertility",
-    "chunk_stitch_detect", "privacy_k_anonymity", "corpus_datasheet",
-    "udtf_sentence_split", "dedup_url_exact", "split_kfold_assign",
-    "sketch_kmv_merge", "events_anomaly_mad", "export_jsonl_manifest",
-    "stats_partial_merge", "drift_snapshot_stats", "ab_test_metrics",
-    "graph_degree_distribution", "dedup_shingle_containment",
-    "split_walk_forward", "graph_link_prediction",
-    "feature_hashing_vectorize", "feature_target_encode_loo",
-    "labels_next_event", "dedup_tokenset_fingerprint",
-    "epoch_shuffle_audit", "index_postings_delta", "eval_calibration_bins",
-    "corpus_budget_select", "eval_pass_at_k", "ngram_nucleus_cutoff",
-    "er_blocked_match_score", "eval_pairwise_winrate",
-    "sketch_theta_intersect",
-]
-
-# Keys present in CORRECTNESS_r08.json (driver gate, round 8): 50/50 green
-# (rows + schema + hash, zero err).
-DRIVER_VERIFIED_R08 = [
-    "ab_permutation_test", "anomaly_seasonal_residual",
-    "apriori_triple_itemsets", "backfill_gap_plan", "batch_padding_waste",
-    "consistent_hash_rebalance", "dq_benford_digits",
-    "dq_overdispersion_vmr", "dq_sequence_audit", "encoding_rle_audit",
-    "eval_kendall_tau", "exact_median_twopass",
-    "feature_quantile_normalize", "filter_ablation_grid",
-    "forecast_seasonal_naive_mae", "geo_dbscan_core_points",
-    "geo_grid_spatial_join", "graph_kcore_mutual_knn",
-    "graph_ktruss_mutual_knn", "graph_mutual_knn_recall_audit",
-    "graph_rich_club", "graph_temporal_reachability",
-    "hash_collision_audit", "holt_linear_fold", "index_phrase_query",
-    "ivm_delta_aggregate", "join_cardinality_estimate", "late_event_audit",
-    "markov_stationary_iter", "multimodal_audio_zcr",
-    "multimodal_image_sobel", "multimodal_video_motion",
-    "pattern_match_recognize", "privacy_l_diversity",
-    "quota_largest_remainder", "range_partition_balance", "regr_theil_sen",
-    "retrieval_threshold_algorithm", "rfm_segmentation", "scd2_asof_lookup",
-    "select_greedy_max_coverage", "semdedup_keepers", "sim_ivf_topk",
-    "sim_pq_recall_audit", "skew_diagnosis_report",
-    "skyline_pareto_frontier", "text_kwic_concordance",
-    "token_shannon_code_audit", "udaf_weighted_median",
-    "zonemap_skip_stats",
-]
-
-# Keys present in CORRECTNESS_r09.json (driver gate, round 9): 48/50 green;
-# the 2 hash-fail rows (sample_kcenter_coreset, maintenance_compaction_plan)
-# were DuckDB HUGEINT→float64 oracle TYPING (values verified identical by
-# the r9 judge) — oracles CAST to BIGINT in round 10 and both re-pinned
-# first in PRIORITY_UNCHECKED below.
-DRIVER_VERIFIED_R09 = [
-    "blocklist_term_audit", "budget_knapsack_optimal", "cache_static_hitrate_curve",
-    "corpus_temperature_mix", "decayed_value_sum", "dq_chi2_independence",
-    "dq_luhn_checksum", "drift_tv_distance", "er_entity_clusters",
-    "er_sorted_neighborhood", "eval_auc_exact", "eval_bootstrap_ci",
-    "eval_brier_ece", "eval_cohens_kappa", "eval_mcc",
-    "eval_rouge_n", "eval_spearman_rho", "events_cusum_drift",
-    "funnel_time_to_convert", "graph_degree_assortativity", "graph_kcore_mutual_knn",
-    "graph_ktruss_mutual_knn", "graph_mutual_knn_recall_audit", "graph_rich_club",
-    "haar_transform_daily", "interarrival_percentiles", "join_bloom_prefilter_audit",
-    "maintenance_compaction_plan", "metric_jackknife_cohorts", "optimal_stopping_audit",
-    "pooled_screening_dorfman", "privacy_t_closeness", "retention_vacuum_plan",
-    "s5_scan_project", "s6_scan_filter_eq", "sample_kcenter_coreset",
-    "seq_lis_length", "session_max_concurrency", "sim_late_interaction_topk",
-    "sim_margin_topk", "simpson_paradox_audit", "sketch_ams_f2",
-    "sketch_fm_rho_max", "source_token_jaccard", "stream_rate_limit_audit",
-    "text_longest_repeated_ngram", "token_huffman_code_audit", "tokenizer_oov_audit",
-    "w_gini_by_group", "weekday_profile",
-]
-
-# Keys present in CORRECTNESS_r10.json (driver gate, round 10): 50/50
-# green, 0 fails, 0 errors — the first round where every registry entry
-# is simultaneously driver-checked AND latest-green (383/383).
-DRIVER_VERIFIED_R10 = [
-    "a10_count_distinct", "a12_rollup", "a13_cube",
-    "a1_distinct", "a5_derived_guard", "a6_mode_per_group",
-    "a8_a9_conditional_agg", "dedup_minhash_recall_audit", "dedup_substring_spans",
-    "dedup_substring_spans_apply", "domain_daily_insights", "embedding_pq_encode",
-    "f1_duration_parse", "f_datetime", "j1_anti_join",
-    "j2_semi_join", "j3_multiway_join", "j4_explode_tokens",
-    "j5_outer_join", "j6_asof_join", "j7_range_join",
-    "kmeans_lloyd_integer", "l_global_sort", "l_global_topk",
-    "l_topk_per_group", "maintenance_compaction_plan", "multimodal_audio_fingerprint_dedup",
-    "multimodal_pair_dedup_audit", "p1_nested_extract", "p6_in_set",
-    "pack_sequences_ffd", "q1_pricing_summary", "s7_scan_range",
-    "s8_existence_probe", "sample_kcenter_coreset", "sessionize",
-    "sim_ivf_pivot_topk", "sim_ivf_topk", "sim_ivfadc_residual_topk",
-    "sim_ivfadc_topk", "sim_pq_adc_topk", "sim_pq_recall_audit",
-    "skew_salted_agg", "split_leakage_free_components", "u1_union_all",
-    "u2_except_intersect", "w2_trailing_window", "w3_weekly_rollup",
-    "w_rank_lag_running", "w_rank_suite",
-]
-
-# Keys present in CORRECTNESS_r11.json (driver gate, round 11): 50/50
-# green, 0 fails, 0 errors — second consecutive round with every registry
-# entry simultaneously driver-checked AND latest-green (385/385).
-DRIVER_VERIFIED_R11 = [
-    "dedup_minhash_lsh", "dedup_minhash_jaccard_est", "dedup_minhash_recall_audit",
-    "dedup_components_lsh", "dedup_minhash_recall_audit_sampled", "f9_format_number",
-    "f_string_funcs", "a15_percentiles", "a16_string_agg",
-    "a17_pivot", "f_math_funcs", "f_array_funcs",
-    "f_conditional_null", "a18_having", "f_string_suite",
-    "f_date_suite", "dedup_exact", "dedup_ngram_jaccard",
-    "funnel_view_click_purchase", "retention_cohorts", "dedup_levenshtein",
-    "dedup_embedding_cosine", "sim_bruteforce_topk", "clean_corpus_pipeline",
-    "sim_label_centroids", "text_stats", "text_langid",
-    "text_token_bpe", "grouped_zscore", "text_fingerprint",
-    "f_json_funcs", "f_variant_funcs", "cdc_latest_per_key",
-    "a20_argmax", "a21_stats_moments", "f_bitwise_funcs",
-    "dedup_components", "sample_hash_split", "doc_chunk_overlap",
-    "contamination_check", "q3_shipping_priority", "q5_local_supplier_volume",
-    "q6_forecast_revenue", "q18_large_volume_customer", "q4_order_priority",
-    "q12_priority_class_counts", "q14_promo_revenue_share", "q19_disjunctive_predicates",
-    "q7_volume_shipping", "q8_market_share",
-]
-
-DRIVER_VERIFIED_R12 = [
-    "dedup_components_lsh", "cms_heavy_hitters", "graph_temporal_reachability",
-    "dedup_shingle_containment", "zonemap_skip_stats",
-    "graph_degree_distribution", "text_longest_repeated_ngram",
-    "graph_pagerank", "graph_label_propagation", "graph_bfs_distances",
-    "graph_personalized_pagerank", "split_leakage_free_lsh",
-    "dedup_containment_capped", "token_huffman_code_audit_capped",
-    "q10_returned_items", "q15_top_supplier", "q17_small_quantity_revenue",
-    "q22_dormant_customers", "q13_customer_distribution",
-    "q21_waiting_suppliers", "q9_product_type_profit", "q11_important_parts",
-    "q16_supplier_part_counts", "q2_min_cost_supplier",
-    "q20_excess_shipment_suppliers", "multimodal_image_features",
-    "w_forward_fill", "resample_daily", "a22_histogram", "j6b_asof_forward",
-    "j4b_posexplode", "f_map_funcs", "f_array_hof", "j4c_explode_outer",
-    "f_try_arith", "a24_regr_fit", "dedup_components_star",
-    "dedup_keep_best", "sim_range_search", "r1_recursive_spine",
-    "pack_sequences_linear", "winsorize_doc_lengths", "scd2_build",
-    "activity_islands", "profile_table", "snapshot_diff",
-    "hopping_window_counts", "dedup_incremental", "text_redact_pii",
-    "text_repetition_score",
-]
-
-DRIVER_VERIFIED: set[str] = (
-    set(DRIVER_VERIFIED_R01)
-    | set(DRIVER_VERIFIED_R02_R03)
-    | set(DRIVER_VERIFIED_R04)
-    | set(DRIVER_VERIFIED_R05)
-    | set(DRIVER_VERIFIED_R06)
-    | set(DRIVER_VERIFIED_R07)
-    | set(DRIVER_VERIFIED_R08)
-    | set(DRIVER_VERIFIED_R09)
-    | set(DRIVER_VERIFIED_R10)
-    | set(DRIVER_VERIFIED_R11)
-    | set(DRIVER_VERIFIED_R12)
+# entries changed since the newest CORRECTNESS file; empty it when one lands
+FIRST = (
+    "f1_duration_parse", "report_html_hash", "a6_mode_per_group", "s3_bronze_roundtrip",
+    "s1_datasource_roundtrip", "s2_channels_roundtrip", "domain_daily_insights",
 )
-
-# Round-12 window: zero red rows and zero never-checked entries after
-# round 11, so only prudence pins lead — entries whose IMPLEMENTATION
-# (not oracle) changed this round (the kmeans-r10 precedent):
-#   * dedup_components_lsh switched from min-label propagation to
-#     connected_components_star (ADVICE r11 medium: the label loop could
-#     silently return unconverged components after max_iter; the star
-#     closure is O(log n) rounds and raises on non-convergence).  Same
-#     output contract (component = min reachable id), oracle unchanged,
-#     verified EXACT at both gate SFs on a vanilla session as the switch
-#     landed.
-#   * cms_heavy_hitters: ORACLE TEXT changed — the sketch's 4 hash rows
-#     moved from the retired restricted affine family (a,b < 2^30 vs
-#     p = 2^61-1, near-order-preserving) to the Carter-Wegman mod 2^31-1
-#     family MinHash uses (ADVICE r11); both engine sides replay the new
-#     params, verified EXACT at both gate SFs as the switch landed.
-#   * graph_temporal_reachability: IMPLEMENTATION changed (oracle
-#     unchanged) — the quadratic co-occurrence clique expansion star-
-#     expands through virtual hub nodes after the 100x sweep measured
-#     the clique edge list dying on local disk; arrivals after 2k hub
-#     rounds equal the clique graph's after k rounds, verified EXACT
-#     at both gate SFs as the rewrite landed (100x: disk death -> 24 s).
-#   * dedup_shingle_containment: IMPLEMENTATION changed (oracle
-#     unchanged) — gained the loud max_posting_len guard; values
-#     identical under the guard, EXACT at sf0.01 as it landed.
-#   * graph_personalized_pagerank: ORACLE TEXT + IMPLEMENTATION
-#     changed AGAIN late in r12 — the 100x-EXACT extension caught the
-#     custkey + 1e6 node offset as an absolute-threshold scale bug
-#     (replica suppkeys pass 1e6, collide with the customer space, and
-#     the oracle's `node < 1000000` seed guard diverged from Spark's
-#     `suppkey % 100 = 0`: EXACT at both gate SFs, WRONG at 100x).
-#     Node encoding is now parity-based (2s / 2c+1, disjoint at any
-#     scale), seeds a pure function of suppkey on both engines; EXACT
-#     at sf0.001 + sf0.01 + vanilla sim as the fix landed.
-#   * graph_pagerank / graph_label_propagation / graph_bfs_distances /
-#     graph_personalized_pagerank: ORACLE TEXT changed — the shared
-#     pairs/edges/outdeg/nodes CTEs and the unrolled rounds are now
-#     AS MATERIALIZED (DuckDB re-inlined the 60M-x-15M edge build into
-#     every unrolled round and spilled past local disk at the 100x
-#     replica); identical values, all four EXACT at sf0.01 as the
-#     change landed (and pagerank/bfs now EXACT at /tmp/sf10 itself —
-#     1.6 M rows each, SCALING §8b).
-#   * zonemap_skip_stats: IMPLEMENTATION changed (oracle unchanged) —
-#     the two single-task global NTILE windows became the production
-#     repartitionByRange + in-plan offset pattern after the completed
-#     100x sweep measured them at 190 s; EXACT at both gate SFs +
-#     vanilla-driver sim as the rewrite landed.
-#   * graph_degree_distribution: IMPLEMENTATION changed (oracle
-#     unchanged) — dropped the union-distinct exchange the disjoint
-#     node-id spaces make a no-op; EXACT at both gate SFs + 100x.
-#   * text_longest_repeated_ngram: IMPLEMENTATION changed (oracle
-#     unchanged) — gram keys now xxhash64-hashed in the generation
-#     lambda so the aggregate shuffle never carries n-gram text;
-#     EXACT at both gate SFs + vanilla-driver sim.
-# Tier 2 then auto-covers the round-12 additions (split_leakage_free_lsh,
-# dedup_containment_capped, token_huffman_code_audit_capped — the last
-# is the production Huffman form the completed 100x sweep demanded; all
-# vanilla-session EXACT at both gate SFs); remaining slots fall to
-# tier 3 staleness rotation (stalest surviving rows are the r3/r4-era
-# entries not re-checked since).
-# Round-13 window (OPTIMIZATION round): the driver re-verified all 11
-# r12 pins plus the tier-2/3 rotation (CORRECTNESS_r12: 50/50 green) —
-# rotate them out.  No new entries exist (optimization rounds add no
-# features), so pins are (a) entries whose IMPLEMENTATION this round's
-# optimizations touch (appended as they land, the kmeans-r10 precedent;
-# each verified EXACT at both gate SFs on a vanilla session as it
-# lands), then (b) the stalest surviving tier — the r5-r7 rows that
-# have not been driver-rotated in 5-7 rounds.
-PRIORITY_UNCHECKED: list[str] = [
-    # (a) r13 touched implementations/oracles (ADVICE r12 parity fix:
-    # degree distribution's node encoding is now 2s / 2c+1 on both
-    # sides — output invariant; plus the optimization-touched entries)
-    "graph_degree_distribution",
-    "zonemap_skip_stats",
-    "graph_kcore_mutual_knn",
-    "graph_ktruss_mutual_knn",
-    "graph_rich_club",
-    "graph_mutual_knn_recall_audit",
-    "sim_margin_topk",
-    "graph_hits",
-    "dedup_minhash_lsh",
-    "dedup_minhash_jaccard_est",
-    "dedup_components_lsh",
-    "dedup_minhash_recall_audit_sampled",
-    "split_leakage_free_lsh",
-    "semdedup_keepers",
-    "sim_lsh_topk",
-    "dedup_embedding_cosine",
-    # (b) staleness tier
-    "s3_bronze_roundtrip",
-    "p2_channel_defaults",
-    "f2_timestamp_parse",
-    "s1_datasource_roundtrip",
-    "s2_channels_roundtrip",
-    "report_html_hash",
-    "udtf_sentence_split",
-]
-
-# Round-12 window — superseded by the round-13 list above, kept for the
-# audit trail (all 11 re-verified green in CORRECTNESS_r12).
-PRIORITY_UNCHECKED_R12 = [
-    "dedup_components_lsh",
-    "cms_heavy_hitters",
-    "graph_temporal_reachability",
-    "dedup_shingle_containment",
-    "zonemap_skip_stats",
-    "graph_degree_distribution",
-    "text_longest_repeated_ngram",
-    "graph_pagerank",
-    "graph_label_propagation",
-    "graph_bfs_distances",
-    "graph_personalized_pagerank",
-]
-
-# Round-11 window — superseded by the round-12 list above, kept for the
-# audit trail: the round began with no pins (zero red rows, zero
-# never-checked entries), but the MinHash permutation-family fix landed
-# mid-round — _cw_params31 replaced the near-order-preserving
-# a,b < 2^30 / p = 2^61-1 affine family (see operators/dedup.py) — so
-# every entry whose ORACLE TEXT embeds the family re-pinned first (all
-# verified EXACT at sf0.001 AND sf0.01 on a vanilla session as the fix
-# landed; the recall audit's precision moved 0.21 -> 1.000).  Tier 2
-# then auto-covered the two round-11 additions
-# (dedup_minhash_recall_audit_sampled, dedup_components_lsh — both
-# vanilla-session EXACT at both gate SFs); remaining slots fell to
-# tier 3 staleness rotation (r1/r3-era rows).
-PRIORITY_UNCHECKED_R11 = [
-    "dedup_minhash_lsh",
-    "dedup_minhash_jaccard_est",
-    "dedup_minhash_recall_audit",
-]
-
-# Round-10 window — superseded by the round-11 list above (three
-# re-pinned MinHash entries), kept for the audit trail (VERDICT r9
-# items 1, 3, 4):
-#   * FIRST: the two round-9 hash-fails, re-pinned after their oracles
-#     gained CAST(... AS BIGINT) (DuckDB HUGEINT promotion rendered
-#     float64 through .df() where Spark emits long; values were verified
-#     identical by the r9 judge — typing only);
-#   * then the six IVF/PQ retrieval entries whose ORACLE TEXT changed
-#     when cells/probe/codebook became corpus-relative (VERDICT r9 item
-#     4 — ivf_knobs / pq_codebook_size, replayed from COUNT(*) in nc
-#     CTEs; gate-SF results are bit-identical since every gate SF sits
-#     at the (8, 3, 8) floor; sim_pq_recall_audit composes
-#     sim_pq_adc_topk's oracle so its text changed too);
-#   * then tier 2 picks up the eight round-10 second-session additions
-#     automatically (never driver-checked, so they outrank tier 3):
-#     sim_ivfadc_residual_topk, dedup_substring_spans,
-#     multimodal_audio_fingerprint_dedup, dedup_minhash_recall_audit,
-#     pack_sequences_ffd, split_leakage_free_components,
-#     multimodal_pair_dedup_audit, dedup_substring_spans_apply — all
-#     verified EXACT vs their oracles at sf0.001 AND sf0.01 on a
-#     vanilla session as they landed;
-#   * remaining ~33 slots fall to tier 3 = stalest driver rows
-#     (r1-verified entries not re-checked since) in registration order.
-PRIORITY_UNCHECKED_R10 = [
-    "sample_kcenter_coreset",
-    "maintenance_compaction_plan",
-    "sim_ivf_pivot_topk",
-    "sim_ivf_topk",
-    "sim_pq_adc_topk",
-    "sim_ivfadc_topk",
-    "sim_pq_recall_audit",
-    "embedding_pq_encode",
-    # implementation (not oracle) changed in round 10 — shares
-    # _lloyd_fit's new salt-group BLAS assignment kernel with
-    # sim_ivf_topk; values bit-identical, re-pinned out of prudence
-    "kmeans_lloyd_integer",
-]
-
-# Round-9 window — superseded by the round-10 list above, kept for the
-# audit trail (VERDICT r8 item 1: close the driver-row lag to zero):
-#   * pinned: entries whose ORACLE changed in round 9 —
-#     events_cusum_drift gained the null filter (ADVICE r8 item 4), and
-#     the five mutual-kNN consumers re-verified after _mknn_knobs made
-#     probe/member corpus-relative;
-#   * then the remaining never-driver-checked entries; tier 3 staleness
-#     re-checks filled the tail.  After round 9 every registry entry has
-#     held at least one driver CORRECTNESS row.
-PRIORITY_UNCHECKED_R09 = [
-    "events_cusum_drift",
-    "graph_mutual_knn_recall_audit",
-    "graph_kcore_mutual_knn",
-    "graph_ktruss_mutual_knn",
-    "graph_rich_club",
-    "sim_margin_topk",
-]
-
-# Round-6 window (VERDICT r5 items 1, 2, 7) — superseded by the round-7
-# list above, kept for the audit trail:
-#   * the 26 round-5 curation additions that have never held a driver row
-#     (all judge-verified EXACT at sf0.01 in the r5 review — this closes
-#     the driver-row gap so every registry entry has a driver row ever);
-#   * `embedding_pca_project`, re-entering with its new sign-canonicalized
-#     exact oracle (was the single `no_oracle` rows-only row in r05);
-#   * `s1_datasource_roundtrip`, the new catalog entry reading through the
-#     `trending_videos` Python DataSource format (S1 promoted from
-#     tests-only into the gate).
-# 26 + 1 + 1 = 28 pinned; the remaining 22 window slots fall to tier 3
-# (oldest driver-verified entries in registration order) — regression
-# re-checks of round-1 queries, useful coverage, not waste.
-PRIORITY_UNCHECKED_R06 = [
-    # never driver-checked (round-5 curation additions)
-    "cdc_chunk_dedup", "contrastive_triplet_mining", "conversation_render",
-    "corpus_merkle_tree", "domain_quota_sample", "eval_knn_confusion",
-    "eval_mrr", "eval_pr_curve", "ewma_user_value", "f_xml_funcs",
-    "fim_transform", "gdpr_delete_propagation", "graph_hits",
-    "interleave_image_text", "multimodal_image_dhash_dedup",
-    "multimodal_image_resize", "pack_attention_spans",
-    "preference_pair_assembly", "sample_weighted_topk", "sft_render_masked",
-    "sketch_kmv_distinct", "span_corruption_t5",
-    "split_decontaminated_train", "text_winnow_fingerprints",
-    "token_cooccurrence_pairs", "token_gini_diversity",
-    # oracle added after the last (rows-only) driver row
-    "embedding_pca_project",
-    # NEW in round 6 (VERDICT r5 #7: S1 DataSource promoted into the gate)
-    "s1_datasource_roundtrip",
-]
-
-# ROUND 7 bookkeeping: after CORRECTNESS_r06 lands, append its keys as
-# DRIVER_VERIFIED_R06 and rebuild PRIORITY_UNCHECKED with (a) any r06
-# failures once fixed, (b) the 33 round-6 additions registered after the
-# r06 window filled (86 unchecked entries, 50 slots; ALL 36 verified by
-# the round-6 definitive full sf0.01 sweep, 273/273 ran, 0 failures):
-# w_pareto_concentration, basket_brand_lift, graph_personalized_pagerank,
-# embedding_health_audit, crawl_politeness_schedule, eval_bleu_components,
-# sketch_bloom_probe, detokenize_roundtrip, embedding_matryoshka_truncate,
-# tokenizer_fertility, chunk_stitch_detect, privacy_k_anonymity,
-# corpus_datasheet, udtf_sentence_split, dedup_url_exact,
-# split_kfold_assign, sketch_kmv_merge, events_anomaly_mad,
-# export_jsonl_manifest, stats_partial_merge, drift_snapshot_stats,
-# ab_test_metrics, graph_degree_distribution, dedup_shingle_containment,
-# split_walk_forward, graph_link_prediction, feature_hashing_vectorize,
-# feature_target_encode_loo, labels_next_event, dedup_tokenset_fingerprint,
-# epoch_shuffle_audit, index_postings_delta, eval_calibration_bins,
-# multimodal_content_sniff, multimodal_transcode_roundtrip,
-# corpus_budget_select — these lead round 7's priorities, (c) then the
-# 20 second-session round-6 additions (catalog_analysis.py; ALL verified
-# oracle-exact at BOTH sf0.01 and sf0.001 on a vanilla session as they
-# landed, and the mid-session definitive sweep ran 285/285 with 0
-# failures): graph_kcore_mutual_knn, graph_ktruss_mutual_knn,
-# eval_pass_at_k, ngram_nucleus_cutoff, er_blocked_match_score,
-# eval_pairwise_winrate, sketch_theta_intersect, ab_permutation_test,
-# zonemap_skip_stats, batch_padding_waste, filter_ablation_grid,
-# late_event_audit, retrieval_threshold_algorithm,
-# skyline_pareto_frontier, holt_linear_fold, ivm_delta_aggregate,
-# exact_median_twopass, skew_diagnosis_report, consistent_hash_rebalance,
-# encoding_rle_audit, geo_grid_spatial_join, graph_temporal_reachability,
-# range_partition_balance, privacy_l_diversity, regr_theil_sen,
-# quota_largest_remainder, hash_collision_audit, eval_kendall_tau,
-# dq_benford_digits, feature_quantile_normalize, token_shannon_code_audit,
-# index_phrase_query, sim_pq_recall_audit, pattern_match_recognize,
-# udaf_weighted_median, select_greedy_max_coverage, backfill_gap_plan,
-# join_cardinality_estimate, forecast_seasonal_naive_mae,
-# rfm_segmentation, dq_overdispersion_vmr, apriori_triple_itemsets,
-# geo_dbscan_core_points, multimodal_image_sobel, multimodal_audio_zcr,
-# dq_sequence_audit, multimodal_video_motion, scd2_asof_lookup,
-# text_kwic_concordance, anomaly_seasonal_residual,
-# markov_stationary_iter, haar_transform_daily, sketch_ams_f2,
-# seq_lis_length, budget_knapsack_optimal, graph_rich_club,
-# sketch_fm_rho_max, weekday_profile, source_token_jaccard,
-# er_entity_clusters, token_huffman_code_audit, eval_cohens_kappa,
-# drift_tv_distance, er_sorted_neighborhood, pooled_screening_dorfman,
-# cache_static_hitrate_curve, optimal_stopping_audit,
-# simpson_paradox_audit, decayed_value_sum, interarrival_percentiles,
-# metric_jackknife_cohorts, funnel_time_to_convert, dq_luhn_checksum,
-# session_max_concurrency — (d) then tier-3
-# regression re-checks keep cycling the oldest verified entries.
+_ROOT = Path(__file__).resolve().parent.parent
 
 
-# round in which each entry last held a driver CORRECTNESS row (later
-# rounds overwrite earlier ones) — tier 3 re-checks the STALEST rows
-# first instead of forever recycling the same early registrations.
-_LAST_VERIFIED: dict[str, int] = {}
-for _rnd, _names in (
-    (1, DRIVER_VERIFIED_R01),
-    (3, DRIVER_VERIFIED_R02_R03),
-    (4, DRIVER_VERIFIED_R04),
-    (5, DRIVER_VERIFIED_R05),
-    (6, DRIVER_VERIFIED_R06),
-    (7, DRIVER_VERIFIED_R07),
-    (8, DRIVER_VERIFIED_R08),
-    (9, DRIVER_VERIFIED_R09),
-    (10, DRIVER_VERIFIED_R10),
-    (11, DRIVER_VERIFIED_R11),
-    (12, DRIVER_VERIFIED_R12),
-):
-    for _n in _names:
-        _LAST_VERIFIED[_n] = _rnd
+def order_for_driver(names, rounds: dict[int, dict[str, dict]]) -> list[str]:
+    """``names`` in driver order; ``rounds`` maps a round to {entry: row}."""
+    latest = {}
+    for rnd in sorted(rounds):
+        for name, row in rounds[rnd].items():
+            ok = all(row.get(k) for k in ("rows_match", "schema_match", "hash_match"))
+            latest[name] = (ok and not row.get("err"), rnd)
+    return sorted(names, key=lambda n: (n not in FIRST, *latest.get(n, (False, 0)), n))
 
 
-def order_for_driver(names: list[str]) -> list[str]:
-    """Order query names so the driver's first-50 window covers fresh work.
-
-    Three tiers:
-      1. priority unchecked (judge-requested for this round's window),
-         in PRIORITY_UNCHECKED order
-      2. remaining driver-unchecked, in registration order
-      3. already driver-verified — stalest first (ascending round of
-         their last driver row, then registration order), so staleness
-         re-checks rotate through the whole registry over rounds
-    """
-    pri_rank = {n: i for i, n in enumerate(PRIORITY_UNCHECKED)}
-    reg_rank = {n: i for i, n in enumerate(names)}
-
-    def key(n: str) -> tuple[int, int, int]:
-        if n in pri_rank:
-            # priority names rank first even when a (failed) driver row
-            # exists — that's how fixed regressions get re-verified
-            return (0, 0, pri_rank[n])
-        if n not in DRIVER_VERIFIED:
-            return (1, 0, reg_rank[n])
-        return (2, _LAST_VERIFIED.get(n, 0), reg_rank[n])
-
-    return sorted(names, key=key)
+@cache
+def correctness_rounds() -> dict[int, dict[str, dict]]:
+    """Every ``CORRECTNESS_r<N>.json`` beside the package, by round."""
+    rounds = {}
+    for path in _ROOT.glob("CORRECTNESS_r*.json"):
+        if m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name):
+            rounds[int(m[1])] = json.loads(path.read_text())
+    return rounds

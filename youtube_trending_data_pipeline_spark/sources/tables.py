@@ -41,6 +41,14 @@ def read_table(
     return reader.parquet(path)
 
 
+def table_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop FileSystem: no read, so
+    an expected absence (a table's first run) logs no failed-read trace."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.exists(hpath)
+
+
 def append_partitioned(df: DataFrame, path: str, partition_col: str = "date") -> None:
     """WRITE_APPEND parity (S10). Prefer overwrite_date_partition for re-runs."""
     df.write.mode("append").partitionBy(partition_col).parquet(path)
