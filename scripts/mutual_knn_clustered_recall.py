@@ -185,9 +185,9 @@ def _sampled_exact_edges(spark, sf_dir: str, mod: int):
     knn = (
         probers.unionByName(members)
         .groupBy("cell")
-        .applyInPandas(
-            lambda pdf: ca._knn_cell_kernel(pdf, ca._KNN_K),
-            schema=ca._knn_schema(),
+        .applyInArrow(
+            lambda t_: ca._knn_cell_arrow(t_, ca._KNN_K),
+            schema="u long, v long, dot long",
         )
         .select("u", "v")
     )

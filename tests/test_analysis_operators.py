@@ -2088,13 +2088,13 @@ def test_rowwise_topk_matches_lexsort_reference():
     duplicate values, k > n, and the overflow fallback path."""
     import numpy as np
 
-    import youtube_trending_data_pipeline_spark.catalog_analysis as ca
+    from youtube_trending_data_pipeline_spark.operators import intlinalg as ila
 
     rng = np.random.RandomState(11)
     for m, n, k, hi in [(7, 13, 5, 50), (3, 4, 9, 3), (20, 64, 5, 10**9)]:
         D = rng.randint(-hi, hi, size=(m, n)).astype(np.int64)
         ids = rng.permutation(np.arange(100, 100 + n)).astype(np.int64)
-        got = ca._rowwise_topk(D, ids, k)
+        got = ila._rowwise_topk(D, ids, k)
         kk = min(k, n)
         for r in range(m):
             ref = np.lexsort((ids, -D[r]))[:kk]
@@ -2102,7 +2102,7 @@ def test_rowwise_topk_matches_lexsort_reference():
     # fallback: per-row SPREAD so large even the rebased key overflows
     D = np.array([[2**61, -(2**61), 5]], dtype=np.int64)
     ids = np.array([3, 1, 2], dtype=np.int64)
-    got = ca._rowwise_topk(D, ids, 3)
+    got = ila._rowwise_topk(D, ids, 3)
     assert list(got[0]) == list(np.lexsort((ids, -D[0])))
     # round 10: the Lloyd regime — huge ABSOLUTE magnitude (-d2 keys
     # near -3.3e18) with small per-row spread must take the vectorized
@@ -2115,7 +2115,7 @@ def test_rowwise_topk_matches_lexsort_reference():
     offs[:, 1] = offs[:, 0]  # planted tie -> id tie-break exercised
     D = base + offs
     ids = rng.permutation(np.arange(200, 200 + n)).astype(np.int64)
-    got = ca._rowwise_topk(D, ids, 7)
+    got = ila._rowwise_topk(D, ids, 7)
     for r in range(5):
         ref = np.lexsort((ids, -D[r]))[:7]
         assert list(got[r]) == list(ref), r
@@ -2124,47 +2124,74 @@ def test_rowwise_topk_matches_lexsort_reference():
 def test_exact_int_matmul_bit_exact_and_guarded():
     """float64-BLAS integer matmul is bit-exact against int64 @ for
     in-range magnitudes and raises loudly past the guard (an int64
-    fallback could silently wrap once bound^2*dim > 2^63)."""
+    fallback could silently wrap once bound^2*dim > 2^63). The row-block
+    form concatenates to the same matrix (including an empty A), runs
+    its guard at the call, before any block, and the squared-L2 helper
+    equals the direct difference form."""
     import numpy as np
-    import pytest
 
-    import youtube_trending_data_pipeline_spark.catalog_analysis as ca
+    from youtube_trending_data_pipeline_spark.operators import intlinalg as ila
 
     rng = np.random.RandomState(7)
     A = rng.randint(-30000, 30000, size=(17, 64)).astype(np.int64)
     B = rng.randint(-30000, 30000, size=(23, 64)).astype(np.int64)
-    assert (ca._exact_int_matmul(A, B) == A @ B.T).all()
+    assert (ila._exact_int_matmul(A, B) == A @ B.T).all()
+    blocks = list(ila._exact_int_matmul_blocks(A, B, 5))
+    assert [s for s, _ in blocks] == [0, 5, 10, 15]
+    assert (np.vstack([D for _, D in blocks]) == A @ B.T).all()
+    assert ila._exact_int_matmul(A[:0], B).shape == (0, 23)
+    d2 = ((A[:, None, :] - B[None, :, :]) ** 2).sum(axis=2)
+    assert (ila._exact_sq_l2(A, B) == d2).all()
     # guard path: magnitudes whose squares exceed 2^53 / dim
     A2 = np.full((2, 4), 2**31, dtype=np.int64)
     with pytest.raises(ValueError, match="exact-dot"):
-        ca._exact_int_matmul(A2, A2)
+        ila._exact_int_matmul(A2, A2)
+    with pytest.raises(ValueError, match="exact-dot"):
+        ila._exact_int_matmul_blocks(A2, A2, 1)
+    with pytest.raises(ValueError, match="exact-dot"):
+        ila._exact_sq_l2(A2, A2)
+
+
+def _knn_table(rows):
+    """(vec_id, qv, is_m, is_p) rows -> the Arrow group the kNN cell
+    kernel receives (int32 vector transport, as in production)."""
+    import pyarrow as pa
+
+    return pa.table(
+        {
+            "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+            "qv": pa.array([r[1] for r in rows], pa.list_(pa.int32())),
+            "is_m": pa.array([r[2] for r in rows]),
+            "is_p": pa.array([r[3] for r in rows]),
+        }
+    )
 
 
 def test_knn_cell_kernel_flags_and_self_exclusion():
     """Probers score only members, self-pairs are excluded, ties break
     to the smaller member id, and member rows that do not probe emit
     nothing."""
-    import pandas as pd
-
     import youtube_trending_data_pipeline_spark.catalog_analysis as ca
 
     # vectors chosen so dots are obvious: e1-ish patterns
-    pdf = pd.DataFrame(
-        {
-            "vec_id": [1, 2, 3, 4],
-            "qv": [[10, 0], [10, 0], [10, 0], [0, 10]],
-            # members: 1, 2, 4; probers: 1, 3 (2 and 4 are member-only)
-            "is_m": [True, True, False, True],
-            "is_p": [True, False, True, False],
-        }
+    # members: 1, 2, 4; probers: 1, 3 (2 and 4 are member-only)
+    tbl = _knn_table(
+        [
+            (1, [10, 0], True, True),
+            (2, [10, 0], True, False),
+            (3, [10, 0], False, True),
+            (4, [0, 10], True, False),
+        ]
     )
-    out = ca._knn_cell_kernel(pdf, k=2)
-    got = {(r.u, r.v): r.dot for r in out.itertuples()}
+    out = ca._knn_cell_arrow(tbl, k=2).to_pylist()
+    got = {(r["u"], r["v"]): r["dot"] for r in out}
     # prober 1: members {2, 4} after self-exclusion -> 2 (dot 100), 4 (0)
     # prober 3: members {1, 2, 4} -> top-2 = 1 then 2 (tie 100 -> smaller id)
     assert got == {(1, 2): 100, (1, 4): 0, (3, 1): 100, (3, 2): 100}
     # no output rows for non-probers
-    assert {r.u for r in out.itertuples()} == {1, 3}
+    assert {r["u"] for r in out} == {1, 3}
+    # a group with no prober emits nothing
+    assert ca._knn_cell_arrow(_knn_table([(1, [1, 0], True, False)]), 2).num_rows == 0
 
 
 def test_kmeans_lloyd_recovers_planted_blobs(spark, tmp_path):
@@ -2243,33 +2270,29 @@ def test_knn_kernel_row_block_boundary():
     (bounded memory at any group size); a block size forcing multiple
     blocks — including a ragged last block — must be bit-identical to
     the single-block result."""
-    import numpy as np
-    import pandas as pd
-
     from youtube_trending_data_pipeline_spark import catalog_analysis as ca
 
     n_mem, n_pro, dim, k = 17, 11, 8, 3
     rows = []
     for i in range(n_mem):
-        rows.append({"vec_id": i, "qv": [(i * 7 + j * 3) % 50 - 25 for j in range(dim)],
-                     "is_m": True, "is_p": False})
+        rows.append((i, [(i * 7 + j * 3) % 50 - 25 for j in range(dim)], True, False))
     for i in range(n_pro):
-        rows.append({"vec_id": 100 + i, "qv": [(i * 5 + j * 11) % 50 - 25 for j in range(dim)],
-                     "is_m": False, "is_p": True})
+        rows.append((100 + i, [(i * 5 + j * 11) % 50 - 25 for j in range(dim)], False, True))
     # one prober is ALSO a member id -> exercises the self-mask path
-    rows.append({"vec_id": 3, "qv": rows[3]["qv"], "is_m": False, "is_p": True})
-    pdf = pd.DataFrame(rows)
+    rows.append((3, rows[3][1], False, True))
+    tbl = _knn_table(rows)
 
     old = ca._KNN_BLOCK_CELLS
     try:
         ca._KNN_BLOCK_CELLS = 10**9  # single block
-        a = ca._knn_cell_kernel(pdf, k).sort_values(["u", "v"]).reset_index(drop=True)
+        a = ca._knn_cell_arrow(tbl, k).to_pylist()
         ca._KNN_BLOCK_CELLS = 5 * n_mem  # 5 probers per block, ragged tail
-        b = ca._knn_cell_kernel(pdf, k).sort_values(["u", "v"]).reset_index(drop=True)
+        b = ca._knn_cell_arrow(tbl, k).to_pylist()
     finally:
         ca._KNN_BLOCK_CELLS = old
-    pd.testing.assert_frame_equal(a, b)
-    assert set(a["u"]) == {100 + i for i in range(n_pro)} | {3}
-    assert (a.groupby("u").size() == k).all()
+    assert a == b
+    us = [r["u"] for r in a]
+    assert set(us) == {100 + i for i in range(n_pro)} | {3}
+    assert all(us.count(u) == k for u in set(us))
     # the duplicated-id prober never reports itself
-    assert not ((a["u"] == 3) & (a["v"] == 3)).any()
+    assert not any(r["u"] == 3 and r["v"] == 3 for r in a)

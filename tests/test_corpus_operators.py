@@ -243,71 +243,68 @@ def test_semdedup_threshold_guards():
         _semdedup_threshold_frac(1.5)
 
 
+def _semdedup_cell_table(ids, vecs):
+    """(_id, _qv) Arrow group as the semdedup cell kernel receives it
+    (int32 vector transport, as in production)."""
+    import pyarrow as pa
+
+    return pa.table(
+        {
+            "_id": pa.array(ids, pa.int64()),
+            "_qv": pa.array([list(map(int, v)) for v in vecs], pa.list_(pa.int32())),
+        }
+    )
+
+
 def test_semdedup_kernel_guards():
     """ADVICE r8: predicate-headroom and cell-cap guards raise loudly
     instead of silently wrapping int64 / OOMing on a hot cell."""
-    import numpy as np
-    import pandas as pd
     import pytest
 
     from youtube_trending_data_pipeline_spark.operators.dedup import (
         _SEMDEDUP_CELL_CAP,
-        _semdedup_cell_kernel,
+        _semdedup_cell_arrow,
     )
 
     # |v|^2 = 2 * (2^20)^2 = 2^41; q=20 -> q^2*(2^41)^2 = 400*2^82 >> 2^63
     # yet bound^2*dim = 2^41 < 2^53 passes the Gram-exactness guard —
     # exactly the gap ADVICE flagged.
-    big = np.int64(2**20)
-    pdf = pd.DataFrame(
-        {"_id": np.array([1, 2], dtype=np.int64),
-         "_qv": [np.array([big, big], dtype=np.int64)] * 2}
-    )
+    big = 2**20
     with pytest.raises(ValueError, match="headroom"):
-        _semdedup_cell_kernel(pdf, 17, 20)
+        _semdedup_cell_arrow(_semdedup_cell_table([1, 2], [[big, big]] * 2), 17, 20)
 
-    hot = pd.DataFrame(
-        {"_id": np.arange(_SEMDEDUP_CELL_CAP + 1, dtype=np.int64),
-         "_qv": [np.array([1, 0], dtype=np.int64)]
-         * (_SEMDEDUP_CELL_CAP + 1)}
+    hot = _semdedup_cell_table(
+        range(_SEMDEDUP_CELL_CAP + 1), [[1, 0]] * (_SEMDEDUP_CELL_CAP + 1)
     )
     with pytest.raises(ValueError, match="cap"):
-        _semdedup_cell_kernel(hot, 1, 4)
+        _semdedup_cell_arrow(hot, 1, 4)
 
 
 def test_semdedup_kernel_block_boundary():
     """Row-block chunking emits the same pairs as the whole-matrix
     reference across the block boundary."""
-    import numpy as np
-    import pandas as pd
-
     import youtube_trending_data_pipeline_spark.operators.dedup as dd
 
     n = 23
     rng_free = [
-        np.array([(i * 7 + 3) % 11 - 5, (i * 5 + 1) % 9 - 4],
-                 dtype=np.int64)
-        for i in range(n)
+        [(i * 7 + 3) % 11 - 5, (i * 5 + 1) % 9 - 4] for i in range(n)
     ]
-    pdf = pd.DataFrame(
-        {"_id": np.arange(n, dtype=np.int64), "_qv": rng_free}
-    )
+    tbl = _semdedup_cell_table(range(n), rng_free)
     orig_block = dd._SEMDEDUP_GRAM_BLOCK
     try:
         dd._SEMDEDUP_GRAM_BLOCK = 4  # force many blocks
-        got = set(
-            map(tuple,
-                dd._semdedup_cell_kernel(pdf, 1, 2)[["id_a", "id_b"]]
-                .values)
-        )
+        got = {
+            (r["id_a"], r["id_b"])
+            for r in dd._semdedup_cell_arrow(tbl, 1, 2).to_pylist()
+        }
     finally:
         dd._SEMDEDUP_GRAM_BLOCK = orig_block
     want = set()
     for i in range(n):
         for j in range(i + 1, n):
             a, b = rng_free[i], rng_free[j]
-            dot = int(a @ b)
-            na, nb = int(a @ a), int(b @ b)
+            dot = a[0] * b[0] + a[1] * b[1]
+            na, nb = a[0] ** 2 + a[1] ** 2, b[0] ** 2 + b[1] ** 2
             if dot >= 0 and na > 0 and nb > 0 and 4 * dot * dot >= na * nb:
                 want.add((i, j))
     assert got == want

@@ -161,7 +161,7 @@ def test_no_accidental_cartesian_anywhere(spark):
         # graph_mutual_knn_recall_audit: deliberately composes the
         # all-pairs exact baseline (a 32-row _EXACT_SALTS spine
         # crossJoined onto the quantized corpus so each salt group's
-        # applyInPandas kernel sees all members at O(P*n) Arrow
+        # applyInArrow kernel sees all members at O(P*n) Arrow
         # transfer, not O(n^2)) to audit the bucketed production
         # build's recall, plus three 1-row count appends. The three
         # graph-structure entries themselves run on the bounded
@@ -688,18 +688,48 @@ def test_xml_funcs_zero_shuffle(spark):
 def test_pq_encode_broadcast_codebook_single_reduce(spark):
     """embedding_pq_encode (round 10: salt-group BLAS kernel): the
     corpus must reach the kernel through ONE salt-group exchange
-    (FlatMapGroupsInPandas), with the codebook replicated via the
+    (FlatMapGroupsInArrow), with the codebook replicated via the
     bounded broadcast salt spine — never a shuffled join of a scored
     n x centroids stream, and never a per-row Python UDF."""
     df = QUERIES["embedding_pq_encode"].fn(spark, SF)
     plan = formatted_plan(df)
-    assert "FlatMapGroupsInPandas" in plan, plan
+    assert "FlatMapGroupsInArrow" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
     # exactly one corpus-sized shuffle: the salt-group partitioning
     # (the seed limit's single-partition exchange is AQE-collapsed;
     # the salt spine reaches the kernel via broadcast)
     assert count_exchanges(df) == 1, plan
+
+
+# every entry that runs a grouped vector kernel (semdedup, mutual kNN,
+# integer Lloyd, the IVF/PQ family)
+_VECTOR_KERNEL_ENTRIES = (
+    "semdedup_keepers",
+    "graph_kcore_mutual_knn",
+    "graph_ktruss_mutual_knn",
+    "graph_rich_club",
+    "graph_mutual_knn_recall_audit",
+    "sim_margin_topk",
+    "kmeans_lloyd_integer",
+    "sim_ivf_topk",
+    "sim_ivf_pivot_topk",
+    "embedding_pq_encode",
+    "sim_pq_adc_topk",
+    "sim_ivfadc_topk",
+    "sim_ivfadc_residual_topk",
+)
+
+
+@pytest.mark.parametrize("name", _VECTOR_KERNEL_ENTRIES)
+def test_vector_kernels_run_as_arrow_not_pandas(spark, name):
+    """The grouped vector kernels are applyInArrow adapters: no plan of
+    an entry that uses them holds a pandas grouped-map node
+    (FlatMapGroupsInPandas, the legacy per-row object-column decode).
+    Kernels behind a localCheckpoint or an eager count do not show in
+    the final plan; the IVF/PQ entries show theirs."""
+    plan = formatted_plan(QUERIES[name].fn(spark, SF))
+    assert "FlatMapGroupsInPandas" not in plan, plan
 
 
 def test_bloom_probe_broadcast_both_sides(spark):

@@ -314,24 +314,27 @@ def test_semdedup_kernel_matches_pairwise_reference(vecs, p, q):
     """The BLAS Gram kernel emits exactly the pairs the per-pair
     rational predicate admits (id_a < id_b, dot >= 0, both norms > 0,
     q^2 dot^2 >= p^2 na2 nb2) — checked against a pure-Python O(n^2)
-    reference on arbitrary small integer vectors."""
-    import numpy as np
-    import pandas as pd
+    reference on arbitrary small integer vectors, fed as the int32
+    Arrow group production sends, ids in a shuffled row order."""
+    import pyarrow as pa
 
     from youtube_trending_data_pipeline_spark.operators.dedup import (
-        _semdedup_cell_kernel,
+        _semdedup_cell_arrow,
     )
 
     if p > q:
         p = q  # threshold <= 1 like a cosine
     ids = list(range(100, 100 + len(vecs)))
-    pdf = pd.DataFrame(
-        {"_id": np.array(ids, dtype=np.int64),
-         "_qv": [np.array(v, dtype=np.int64) for v in vecs]}
+    order = _shuffled(len(vecs))
+    tbl = pa.table(
+        {
+            "_id": pa.array([ids[i] for i in order], pa.int64()),
+            "_qv": pa.array([vecs[i] for i in order], pa.list_(pa.int32())),
+        }
     )
-    got = set(
-        map(tuple, _semdedup_cell_kernel(pdf, p, q)[["id_a", "id_b"]].values)
-    )
+    out = _semdedup_cell_arrow(tbl, p, q).to_pylist()
+    got = [(r["id_a"], r["id_b"]) for r in out]
+    assert len(got) == len(set(got))
     want = set()
     for i in range(len(vecs)):
         for j in range(i + 1, len(vecs)):
@@ -341,7 +344,7 @@ def test_semdedup_kernel_matches_pairwise_reference(vecs, p, q):
             if dot >= 0 and na2 > 0 and nb2 > 0 \
                     and q * q * dot * dot >= p * p * na2 * nb2:
                 want.add((ids[i], ids[j]))
-    assert got == want
+    assert set(got) == want
 
 
 @given(
@@ -405,14 +408,49 @@ def test_poisson_weights_sum_preserves_mean_bounds(seed):
     assert 0.95 < mean < 1.05  # Poisson(1) mean within grid tolerance
 
 
+def _shuffled(n):
+    """A fixed non-sorted row order, so a kernel cannot rely on input order."""
+    return sorted(range(n), key=lambda i: ((i * 7919) % 97, i))
+
+
+def _seed_group(vecs, n_seeds, ids_col="vec_id", vec_col="qv", flag="is_seed", width=None):
+    """The Arrow group a salt-group kernel receives: every vector as a
+    prober (ids 100, 101, ...), plus the first ``n_seeds`` of them by id
+    again as seed rows, in a shuffled row order. Returns the table and
+    the ids."""
+    import pyarrow as pa
+
+    ids = list(range(100, 100 + len(vecs)))
+    rows = [(ids[i], v, False) for i, v in enumerate(vecs)]
+    rows += [(ids[j], vecs[j], True) for j in range(n_seeds)]
+    rows = [rows[i] for i in _shuffled(len(rows))]
+    tbl = pa.table(
+        {
+            ids_col: pa.array([r[0] for r in rows], pa.int64()),
+            vec_col: pa.array([r[1] for r in rows], pa.list_(width or pa.int32())),
+            flag: pa.array([r[2] for r in rows]),
+        }
+    )
+    return tbl, ids
+
+
+def _nearest(v, seeds, n):
+    """Reference (d2 ASC, id ASC) rule: the ``n`` nearest (d2, id) of
+    ``seeds`` [(id, vector)] to ``v`` by exact squared L2."""
+    return sorted(
+        (sum((a - b) * (a - b) for a, b in zip(v, s)), sid) for sid, s in seeds
+    )[:n]
+
+
+_small_vecs = st.lists(
+    st.lists(st.integers(min_value=-1000, max_value=1000), min_size=3, max_size=3),
+    min_size=1,
+    max_size=10,
+)
+
+
 @given(
-    vecs=st.lists(
-        st.lists(
-            st.integers(min_value=-1000, max_value=1000),
-            min_size=3, max_size=3,
-        ),
-        min_size=1, max_size=10,
-    ),
+    vecs=_small_vecs,
     n_seeds=st.integers(min_value=1, max_value=6),
     probe=st.integers(min_value=1, max_value=6),
     member=st.integers(min_value=1, max_value=6),
@@ -421,270 +459,155 @@ def test_poisson_weights_sum_preserves_mean_bounds(seed):
 def test_pivot_rank_kernel_matches_reference(vecs, n_seeds, probe, member):
     """The BLAS pivot-ranking kernel emits exactly each prober's
     top-probe cells by (dot DESC, seed_id ASC) with is_m = rank <=
-    member — checked against a pure-Python reference on arbitrary
-    small integer vectors (seeds = the first n_seeds vectors by id,
-    like the production build)."""
-    import numpy as np
-    import pandas as pd
-
+    member, is_p set and the prober's own vector as the qv payload —
+    checked against a pure-Python reference on arbitrary small integer
+    vectors (seeds = the first n_seeds vectors by id, like the
+    production build)."""
     from youtube_trending_data_pipeline_spark.catalog_analysis import (
-        _pivot_rank_kernel,
+        _pivot_rank_arrow,
     )
 
     n_seeds = min(n_seeds, len(vecs))
-    ids = list(range(100, 100 + len(vecs)))
-    seed_ids = ids[:n_seeds]
-    rows = []
-    for i, v in enumerate(vecs):
-        rows.append((ids[i], np.array(v, dtype=np.int64), False))
-    for j in range(n_seeds):
-        rows.append(
-            (seed_ids[j], np.array(vecs[j], dtype=np.int64), True)
-        )
-    pdf = pd.DataFrame(rows, columns=["vec_id", "qv", "is_seed"])
-    # shuffle rows deterministically so the kernel can't rely on order
-    pdf = pdf.iloc[np.argsort([(i * 7919) % 97 for i in range(len(pdf))],
-                              kind="stable")].reset_index(drop=True)
-    got = _pivot_rank_kernel(pdf, probe, member)
+    tbl, ids = _seed_group(vecs, n_seeds)
+    got = _pivot_rank_arrow(tbl, probe, member).to_pylist()
+    assert all(r["is_p"] for r in got)
     got_set = {
-        (r.vec_id, r.cell, bool(r.is_m))
-        for r in got.itertuples()
+        (r["vec_id"], r["cell"], r["is_m"], tuple(r["qv"])) for r in got
     }
+    assert len(got_set) == len(got)
     want = set()
     for i, v in enumerate(vecs):
-        dots = []
-        for j in range(n_seeds):
-            dots.append(
-                (-sum(a * b for a, b in zip(v, vecs[j])), seed_ids[j])
-            )
-        dots.sort()
+        dots = sorted(
+            (-sum(a * b for a, b in zip(v, vecs[j])), ids[j])
+            for j in range(n_seeds)
+        )
         for r, (_, sid) in enumerate(dots[:probe], start=1):
-            want.add((ids[i], sid, r <= member))
+            want.add((ids[i], sid, r <= member, tuple(v)))
     assert got_set == want
-    assert (got["is_p"]).all()
 
 
 @given(
-    vecs=st.lists(
-        st.lists(
-            st.integers(min_value=-1000, max_value=1000),
-            min_size=3, max_size=3,
-        ),
-        min_size=1, max_size=10,
-    ),
-    n_seeds=st.integers(min_value=1, max_value=6),
-    probe=st.integers(min_value=1, max_value=6),
-    member=st.integers(min_value=1, max_value=6),
+    vecs=_small_vecs,
+    flags=st.lists(st.tuples(st.booleans(), st.booleans()), min_size=10, max_size=10),
     k=st.integers(min_value=1, max_value=4),
 )
 @settings(max_examples=60, deadline=None)
-def test_arrow_kernels_match_pandas_reference(vecs, n_seeds, probe, member, k):
-    """r13: the Arrow-native production kernels (_pivot_rank_arrow /
-    _knn_cell_arrow, flat-buffer decode + int32 transport) must emit
-    row-for-row what the pandas reference kernels emit on the same
-    group — same ranking, same flags, same qv payloads, same (u, v,
-    dot) rows."""
-    import numpy as np
-    import pandas as pd
+def test_knn_cell_kernel_matches_reference(vecs, flags, k):
+    """The kNN cell kernel emits, for every prober row, its top-k
+    member rows by (dot DESC, id ASC) with the exact dot, self-pairs
+    excluded; member-only rows emit nothing — checked against a
+    pure-Python reference with arbitrary (is_m, is_p) flags."""
     import pyarrow as pa
 
     from youtube_trending_data_pipeline_spark.catalog_analysis import (
         _knn_cell_arrow,
-        _knn_cell_kernel,
-        _pivot_rank_arrow,
-        _pivot_rank_kernel,
     )
 
-    n_seeds = min(n_seeds, len(vecs))
     ids = list(range(100, 100 + len(vecs)))
-    rows = [
-        (ids[i], np.array(v, dtype=np.int64), False)
-        for i, v in enumerate(vecs)
-    ] + [
-        (ids[j], np.array(vecs[j], dtype=np.int64), True)
-        for j in range(n_seeds)
-    ]
-    pdf = pd.DataFrame(rows, columns=["vec_id", "qv", "is_seed"])
+    flags = flags[: len(vecs)]
+    order = _shuffled(len(vecs))
     tbl = pa.table(
         {
-            "vec_id": pa.array([r[0] for r in rows], pa.int64()),
-            "qv": pa.array(
-                [r[1].astype(np.int32) for r in rows], pa.list_(pa.int32())
-            ),
-            "is_seed": pa.array([r[2] for r in rows]),
+            "vec_id": pa.array([ids[i] for i in order], pa.int64()),
+            "qv": pa.array([vecs[i] for i in order], pa.list_(pa.int32())),
+            "is_m": pa.array([flags[i][0] for i in order]),
+            "is_p": pa.array([flags[i][1] for i in order]),
         }
     )
-    ref = _pivot_rank_kernel(pdf, probe, member)
-    got = _pivot_rank_arrow(tbl, probe, member).to_pandas()
-    assert len(ref) == len(got)
-    for col in ("cell", "vec_id", "is_m", "is_p"):
-        assert (ref[col].to_numpy() == got[col].to_numpy()).all()
-    assert all(
-        (np.asarray(a) == np.asarray(b)).all()
-        for a, b in zip(ref["qv"], got["qv"])
-    )
-    # feed both kernels' shared downstream shape: every row a member,
-    # the first half also probers (mixed flags, self-pairs present)
-    crows = [
-        (ids[i], np.array(v, dtype=np.int64), True, i % 2 == 0)
-        for i, v in enumerate(vecs)
-    ]
-    cpdf = pd.DataFrame(crows, columns=["vec_id", "qv", "is_m", "is_p"])
-    ctbl = pa.table(
-        {
-            "vec_id": pa.array([r[0] for r in crows], pa.int64()),
-            "qv": pa.array(
-                [r[1].astype(np.int32) for r in crows], pa.list_(pa.int32())
-            ),
-            "is_m": pa.array([r[2] for r in crows]),
-            "is_p": pa.array([bool(r[3]) for r in crows]),
-        }
-    )
-    cref = (
-        _knn_cell_kernel(cpdf, k)
-        .sort_values(["u", "v"])
-        .reset_index(drop=True)
-    )
-    cgot = (
-        _knn_cell_arrow(ctbl, k)
-        .to_pandas()
-        .sort_values(["u", "v"])
-        .reset_index(drop=True)
-    )
-    assert cref.equals(cgot)
+    got = [(r["u"], r["v"], r["dot"]) for r in _knn_cell_arrow(tbl, k).to_pylist()]
+    want = []
+    for i, u in enumerate(vecs):
+        if not flags[i][1]:
+            continue
+        cands = sorted(
+            (-sum(a * b for a, b in zip(u, vecs[j])), ids[j])
+            for j in range(len(vecs))
+            if flags[j][0] and j != i
+        )
+        want += [(ids[i], vid, -nd) for nd, vid in cands[:k]]
+    assert sorted(got) == sorted(want)
 
 
 @given(
-    vecs=st.lists(
-        st.lists(
-            st.integers(min_value=-1000, max_value=1000),
-            min_size=3, max_size=3,
-        ),
-        min_size=2, max_size=12,
-    ),
-    n_seeds=st.integers(min_value=1, max_value=5),
-    pq=st.sampled_from([(1, 4), (1, 2), (17, 20), (3, 4)]),
-)
-@settings(max_examples=60, deadline=None)
-def test_semdedup_arrow_kernels_match_pandas_reference(vecs, n_seeds, pq):
-    """r13: the Arrow-native semdedup kernels must emit row-for-row what
-    the pandas reference kernels emit — same argmin-L2 assignment, same
-    qv payloads, same within-cell duplicate pairs."""
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-
-    from youtube_trending_data_pipeline_spark.operators.dedup import (
-        _semdedup_assign_arrow,
-        _semdedup_assign_kernel,
-        _semdedup_cell_arrow,
-        _semdedup_cell_kernel,
-    )
-
-    p, q = pq
-    n_seeds = min(n_seeds, len(vecs))
-    ids = list(range(100, 100 + len(vecs)))
-    rows = [
-        (ids[i], np.array(v, dtype=np.int64), False)
-        for i, v in enumerate(vecs)
-    ] + [
-        (ids[j], np.array(vecs[j], dtype=np.int64), True)
-        for j in range(n_seeds)
-    ]
-    pdf = pd.DataFrame(rows, columns=["_id", "_qv", "is_seed"])
-    tbl = pa.table(
-        {
-            "_id": pa.array([r[0] for r in rows], pa.int64()),
-            "_qv": pa.array(
-                [r[1].astype(np.int32) for r in rows], pa.list_(pa.int32())
-            ),
-            "is_seed": pa.array([r[2] for r in rows]),
-        }
-    )
-    ref = _semdedup_assign_kernel(pdf)
-    got = _semdedup_assign_arrow(tbl).to_pandas()
-    assert len(ref) == len(got)
-    assert (ref["_id"].to_numpy() == got["_id"].to_numpy()).all()
-    assert (ref["cell"].to_numpy() == got["cell"].to_numpy()).all()
-    assert all(
-        (np.asarray(a) == np.asarray(b)).all()
-        for a, b in zip(ref["_qv"], got["_qv"])
-    )
-    cpdf = pd.DataFrame(
-        {"_id": ids, "_qv": [np.array(v, dtype=np.int64) for v in vecs]}
-    )
-    ctbl = pa.table(
-        {
-            "_id": pa.array(ids, pa.int64()),
-            "_qv": pa.array(
-                [np.array(v, dtype=np.int32) for v in vecs],
-                pa.list_(pa.int32()),
-            ),
-        }
-    )
-    cref = (
-        _semdedup_cell_kernel(cpdf, p, q)
-        .sort_values(["id_a", "id_b"])
-        .reset_index(drop=True)
-    )
-    cgot = (
-        _semdedup_cell_arrow(ctbl, p, q)
-        .to_pandas()
-        .sort_values(["id_a", "id_b"])
-        .reset_index(drop=True)
-    )
-    assert cref.equals(cgot)
-
-
-@given(
-    vecs=st.lists(
-        st.lists(
-            st.integers(min_value=-1000, max_value=1000),
-            min_size=3, max_size=3,
-        ),
-        min_size=1, max_size=10,
-    ),
+    vecs=_small_vecs,
     n_seeds=st.integers(min_value=1, max_value=6),
+    coarse=st.booleans(),
 )
 @settings(max_examples=60, deadline=None)
-def test_semdedup_assign_kernel_matches_reference(vecs, n_seeds):
+def test_semdedup_assign_kernel_matches_reference(vecs, n_seeds, coarse):
     """The argmin-L2 assignment kernel picks, for every vector, the
     seed with minimal integer squared distance and the SMALLEST seed
-    id among ties — checked against a pure-Python reference."""
-    import numpy as np
-    import pandas as pd
-
+    id among ties, and carries the vector as its _qv payload — checked
+    against the pure-Python (d2 ASC, id ASC) reference. ``coarse``
+    snaps coordinates to a 3-value grid so distance ties are common."""
     from youtube_trending_data_pipeline_spark.operators.dedup import (
-        _semdedup_assign_kernel,
+        _semdedup_assign_arrow,
     )
 
+    if coarse:
+        vecs = [[x % 3 - 1 for x in v] for v in vecs]
     n_seeds = min(n_seeds, len(vecs))
-    ids = list(range(100, 100 + len(vecs)))
-    rows = [
-        (ids[i], np.array(v, dtype=np.int64), False)
-        for i, v in enumerate(vecs)
-    ]
-    rows += [
-        (ids[j], np.array(vecs[j], dtype=np.int64), True)
-        for j in range(n_seeds)
-    ]
-    pdf = pd.DataFrame(rows, columns=["_id", "_qv", "is_seed"])
-    pdf = pdf.iloc[np.argsort([(i * 6151) % 89 for i in range(len(pdf))],
-                              kind="stable")].reset_index(drop=True)
-    got = {
-        r._1: r.cell
-        for r in _semdedup_assign_kernel(pdf)
-        .rename(columns={"_id": "_1"})
-        .itertuples()
+    tbl, ids = _seed_group(vecs, n_seeds, "_id", "_qv")
+    seeds = list(zip(ids[:n_seeds], vecs[:n_seeds]))
+    out = _semdedup_assign_arrow(tbl).to_pylist()
+    got = {r["_id"]: (r["cell"], r["_qv"]) for r in out}
+    assert len(got) == len(out)
+    assert got == {
+        ids[i]: (_nearest(v, seeds, 1)[0][1], v) for i, v in enumerate(vecs)
     }
+
+
+@given(
+    vecs=st.lists(
+        st.lists(st.integers(min_value=-1000, max_value=1000), min_size=4, max_size=4),
+        min_size=1,
+        max_size=10,
+    ),
+    n_seeds=st.integers(min_value=1, max_value=6),
+    n_keep=st.integers(min_value=1, max_value=4),
+    coarse=st.booleans(),
+)
+@settings(max_examples=60, deadline=None)
+def test_pq_and_lloyd_kernels_match_nearest_seed_reference(vecs, n_seeds, n_keep, coarse):
+    """The PQ encoding and Lloyd assignment kernels follow the same
+    (d2 ASC, id ASC) nearest-seed reference as semdedup assignment: PQ
+    emits, per 2-dim subspace, the nearest codeword and its distance;
+    Lloyd emits the n_keep nearest centroids with d2 and rank."""
+    import pyarrow as pa
+
+    from youtube_trending_data_pipeline_spark.catalog_analysis_series import (
+        _lloyd_assign_arrow,
+    )
+    from youtube_trending_data_pipeline_spark.operators.similarity import (
+        _pq_encode_arrow,
+    )
+
+    if coarse:
+        vecs = [[x % 3 - 1 for x in v] for v in vecs]
+    n_seeds = min(n_seeds, len(vecs))
+    tbl, ids = _seed_group(vecs, n_seeds, width=pa.int64())
+    seeds = list(zip(ids[:n_seeds], vecs[:n_seeds]))
+    out = _pq_encode_arrow(tbl, 2, 2).to_pylist()
+    got = {(r["vec_id"], r["sub"]): (r["code"], r["dist_q"]) for r in out}
+    assert len(got) == len(out)
     want = {}
     for i, v in enumerate(vecs):
-        best = None
-        for j in range(n_seeds):
-            d2 = sum((a - b) * (a - b) for a, b in zip(v, vecs[j]))
-            if best is None or (d2, ids[j]) < best:
-                best = (d2, ids[j])
-        want[ids[i]] = best[1]
+        for sub in range(2):
+            part = slice(2 * sub, 2 * sub + 2)
+            d2, sid = _nearest(v[part], [(s, c[part]) for s, c in seeds], 1)[0]
+            want[(ids[i], sub)] = (sid, d2)
+    assert got == want
+
+    tbl, _ = _seed_group(vecs, n_seeds, vec_col="arr", flag="is_cent", width=pa.int64())
+    got = sorted(
+        (r["vec_id"], r["cell_rank"], r["cid"], r["d2"])
+        for r in _lloyd_assign_arrow(tbl, n_keep).to_pylist()
+    )
+    want = sorted(
+        (ids[i], rank, sid, d2)
+        for i, v in enumerate(vecs)
+        for rank, (d2, sid) in enumerate(_nearest(v, seeds, n_keep), start=1)
+    )
     assert got == want
 
 

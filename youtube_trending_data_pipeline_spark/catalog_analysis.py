@@ -118,28 +118,14 @@ _QV_SPARK_I32 = (
 )
 
 
-# Exact-integer BLAS helpers: moved to operators/intlinalg.py in round
-# 10 so operators/similarity.py's IVF assignment kernels share them
-# without a circular import; re-exported here for the existing kernels
-# and tests.
 from youtube_trending_data_pipeline_spark.operators.intlinalg import (  # noqa: E402
     _SELF_MASK,
     _exact_int_matmul,
+    _exact_int_matmul_blocks,
+    _list_column,
     _rowwise_topk,
+    _split_group,
 )
-
-
-def _knn_schema():
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    return StructType(
-        [
-            StructField("u", LongType()),
-            StructField("v", LongType()),
-            StructField("dot", LongType()),
-        ]
-    )
-
 
 # Peak score-matrix cells per prober row-block. Without blocking, a
 # salt group's D matrix is O(probers x members) ALL AT ONCE — at 100 k
@@ -156,72 +142,14 @@ def _knn_schema():
 # are independent, so the value is unchanged by construction.
 _KNN_BLOCK_CELLS = 2_000_000
 
-
-def _knn_cell_kernel(pdf, k):
-    """Shared applyInPandas kernel for both mutual-kNN builds: score
-    every PROBER row (is_p) against every MEMBER row (is_m) of its
-    group with exact integer matmuls, mask self-pairs, and keep each
-    prober's top-k by (dot DESC, member id ASC) — fully vectorized
-    (_exact_int_matmul + _rowwise_topk; the per-row lexsort loop this
-    replaces cost minutes at sf1). Probers stream in row blocks so peak
-    memory is O(block x members), never O(probers x members) — the
-    semdedup row-block Gram doctrine (round 10)."""
-    import numpy as np
-    import pandas as pd
-
-    mem = pdf[pdf["is_m"]]
-    pro = pdf[pdf["is_p"]]
-    if not len(mem) or not len(pro):
-        return pd.DataFrame(
-            {"u": pd.Series(dtype="int64"),
-             "v": pd.Series(dtype="int64"),
-             "dot": pd.Series(dtype="int64")}
-        )
-    mids = mem["vec_id"].to_numpy(dtype=np.int64)
-    M = np.array(list(mem["qv"]), dtype=np.int64)
-    pids = pro["vec_id"].to_numpy(dtype=np.int64)
-    P = np.array(list(pro["qv"]), dtype=np.int64)
-    block = max(1, _KNN_BLOCK_CELLS // max(len(mids), 1))
-    frames = []
-    for s in range(0, len(pids), block):
-        pb = pids[s:s + block]
-        D = _exact_int_matmul(P[s:s + block], M)  # block x members
-        D[pb[:, None] == mids[None, :]] = _SELF_MASK
-        cols = _rowwise_topk(D, mids, k)
-        dots = np.take_along_axis(D, cols, axis=1).ravel()
-        keep = dots != _SELF_MASK
-        frames.append(pd.DataFrame(
-            {"u": np.repeat(pb, cols.shape[1])[keep],
-             "v": mids[cols.ravel()][keep],
-             "dot": dots[keep]}
-        ))
-    return pd.concat(frames, ignore_index=True)
-
-
 _EXACT_SALTS = 32  # parallelism of the exact build; result-invariant
 
-
-def _pivot_rank_schema():
-    from pyspark.sql.types import (
-        ArrayType,
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField("cell", LongType()),
-            StructField("vec_id", LongType()),
-            StructField("qv", ArrayType(LongType())),
-            StructField("is_m", BooleanType()),
-            StructField("is_p", BooleanType()),
-        ]
-    )
+_PIVOT_ARROW_SCHEMA = (
+    "cell long, vec_id long, qv array<int>, is_m boolean, is_p boolean"
+)
 
 
-def _pivot_rank_kernel(pdf, probe: int, member: int):
+def _pivot_rank_arrow(tbl, probe: int, member: int):
     """Pivot-assignment kernel (round 9): rank every PROBER vector's
     pivot cells by (exact integer dot DESC, seed_id ASC) with ONE
     float64-BLAS matmul per salt group and emit its top-``probe``
@@ -236,157 +164,51 @@ def _pivot_rank_kernel(pdf, probe: int, member: int):
     rows), and ranking is the vectorized _rowwise_topk. Bit-identical
     output by construction: _exact_int_matmul is exact under the
     guarded 2^53 precondition and the composite order matches the old
-    window's (cdot DESC, seed_id ASC)."""
+    window's (cdot DESC, seed_id ASC). The group crosses the Python
+    boundary as flat Arrow buffers, and the replicated qv output is one
+    values buffer + offsets (r13)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    seeds = pdf[pdf["is_seed"]]
-    pros = pdf[~pdf["is_seed"]]
-    if not len(seeds) or not len(pros):
-        return pd.DataFrame(
-            {"cell": pd.Series(dtype="int64"),
-             "vec_id": pd.Series(dtype="int64"),
-             "qv": pd.Series(dtype="object"),
-             "is_m": pd.Series(dtype="bool"),
-             "is_p": pd.Series(dtype="bool")}
-        )
-    order = np.argsort(seeds["vec_id"].to_numpy(), kind="stable")
-    sids = seeds["vec_id"].to_numpy(dtype=np.int64)[order]
-    S = np.array(list(seeds["qv"]), dtype=np.int64)[order]
-    pids = pros["vec_id"].to_numpy(dtype=np.int64)
-    qvs = list(pros["qv"])
-    V = np.array(qvs, dtype=np.int64)
-    D = _exact_int_matmul(V, S)  # probers x seeds
+    split = _split_group(tbl, "is_seed")
+    if split is None:
+        return pa.table({})
+    sids, S, pids, P = split
     k = min(probe, len(sids))
-    cols = _rowwise_topk(D, sids, k)
+    cols = _rowwise_topk(_exact_int_matmul(P, S), sids, k)
+    rep = np.repeat(np.arange(len(pids)), k)
     ranks = np.tile(np.arange(1, k + 1, dtype=np.int64), len(pids))
-    return pd.DataFrame(
+    return pa.table(
         {
             "cell": sids[cols.ravel()],
-            "vec_id": np.repeat(pids, k),
-            "qv": [qvs[i] for i in np.repeat(np.arange(len(pids)), k)],
+            "vec_id": pids[rep],
+            "qv": _list_column(P[rep]),
             "is_m": ranks <= member,
-            "is_p": np.ones(len(pids) * k, dtype=bool),
+            "is_p": np.ones(len(rep), dtype=bool),
         }
     )
 
 
-from youtube_trending_data_pipeline_spark.operators.intlinalg import (  # noqa: E402
-    _list_matrix,
-    _list_offsets_i32,
-)
-
-_PIVOT_ARROW_SCHEMA = (
-    "cell long, vec_id long, qv array<int>, is_m boolean, is_p boolean"
-)
-
-
-def _pivot_rank_arrow(tbl, probe: int, member: int):
-    """Arrow-native production form of _pivot_rank_kernel (r13):
-    bit-identical ranking (same _exact_int_matmul + _rowwise_topk on
-    the same integers), but the group crosses the Python boundary as
-    flat Arrow buffers and the replicated qv output is rebuilt as one
-    values buffer + offsets instead of per-row Python lists.  The
-    pandas twin stays as the reference implementation
-    (tests/test_properties.py pins them equal)."""
-    import numpy as np
-    import pyarrow as pa
-
-    schema = pa.schema(
-        [
-            pa.field("cell", pa.int64()),
-            pa.field("vec_id", pa.int64()),
-            pa.field("qv", pa.list_(pa.int32())),
-            pa.field("is_m", pa.bool_()),
-            pa.field("is_p", pa.bool_()),
-        ]
-    )
-    n = tbl.num_rows
-    is_seed = (
-        tbl.column("is_seed")
-        .combine_chunks()
-        .to_numpy(zero_copy_only=False)
-        .astype(bool)
-    )
-    vec_id = tbl.column("vec_id").combine_chunks().to_numpy(
-        zero_copy_only=False
-    )
-    if not is_seed.any() or is_seed.all():
-        return schema.empty_table()
-    V = _list_matrix(tbl.column("qv"), n)
-    sraw = vec_id[is_seed]
-    order = np.argsort(sraw, kind="stable")
-    sids = sraw[order]
-    S = V[is_seed][order]
-    pids = vec_id[~is_seed]
-    P = V[~is_seed]
-    D = _exact_int_matmul(P, S)
-    k = min(probe, len(sids))
-    cols = _rowwise_topk(D, sids, k)
-    ranks = np.tile(np.arange(1, k + 1, dtype=np.int64), len(pids))
-    dim = P.shape[1]
-    qv_vals = P[np.repeat(np.arange(len(pids)), k)].ravel().astype(np.int32)
-    # int64-safe offsets with a loud 2^31 guard (r14, ADVICE r13: an
-    # int32 arange wrapped silently once len(pids)*k*dim crossed 2^31)
-    offsets = _list_offsets_i32(len(pids) * k, dim)
-    qv_arr = pa.ListArray.from_arrays(
-        pa.array(offsets, pa.int32()), pa.array(qv_vals, pa.int32())
-    )
-    return pa.table(
-        {
-            "cell": pa.array(sids[cols.ravel()], pa.int64()),
-            "vec_id": pa.array(np.repeat(pids, k), pa.int64()),
-            "qv": qv_arr,
-            "is_m": pa.array(ranks <= member),
-            "is_p": pa.array(np.ones(len(pids) * k, dtype=bool)),
-        },
-        schema=schema,
-    )
-
-
 def _knn_cell_arrow(tbl, k: int):
-    """Arrow-native production form of _knn_cell_kernel (r13): same
-    blocked exact-integer scoring and (dot DESC, id ASC) top-k, minus
-    the pandas object-column qv decode.  Reference pandas twin kept
-    for tests."""
+    """Shared kernel of both mutual-kNN builds: score every PROBER row
+    (is_p) against every MEMBER row (is_m) of its group with exact
+    integer matmuls, mask self-pairs, and keep each prober's top-k by
+    (dot DESC, member id ASC) — fully vectorized (_rowwise_topk; the
+    per-row lexsort loop this replaces cost minutes at sf1). Probers
+    stream in row blocks so peak memory is O(block x members), never
+    O(probers x members) — the semdedup row-block Gram doctrine (round
+    10). Member-only rows emit nothing."""
     import numpy as np
     import pyarrow as pa
 
-    schema = pa.schema(
-        [
-            pa.field("u", pa.int64()),
-            pa.field("v", pa.int64()),
-            pa.field("dot", pa.int64()),
-        ]
-    )
-    n = tbl.num_rows
-    is_m = (
-        tbl.column("is_m")
-        .combine_chunks()
-        .to_numpy(zero_copy_only=False)
-        .astype(bool)
-    )
-    is_p = (
-        tbl.column("is_p")
-        .combine_chunks()
-        .to_numpy(zero_copy_only=False)
-        .astype(bool)
-    )
-    if not is_m.any() or not is_p.any():
-        return schema.empty_table()
-    vec_id = tbl.column("vec_id").combine_chunks().to_numpy(
-        zero_copy_only=False
-    )
-    V = _list_matrix(tbl.column("qv"), n)
-    mids = vec_id[is_m]
-    M = V[is_m]
-    pids = vec_id[is_p]
-    P = V[is_p]
-    block = max(1, _KNN_BLOCK_CELLS // max(len(mids), 1))
+    split = _split_group(tbl, "is_m", "is_p")
+    if split is None:
+        return pa.table({})
+    mids, M, pids, P = split
+    block = max(1, _KNN_BLOCK_CELLS // len(mids))
     us, vs, ds = [], [], []
-    for s in range(0, len(pids), block):
+    for s, D in _exact_int_matmul_blocks(P, M, block):
         pb = pids[s:s + block]
-        D = _exact_int_matmul(P[s:s + block], M)
         D[pb[:, None] == mids[None, :]] = _SELF_MASK
         cols = _rowwise_topk(D, mids, k)
         dots = np.take_along_axis(D, cols, axis=1).ravel()
@@ -396,11 +218,10 @@ def _knn_cell_arrow(tbl, k: int):
         ds.append(dots[keep])
     return pa.table(
         {
-            "u": pa.array(np.concatenate(us), pa.int64()),
-            "v": pa.array(np.concatenate(vs), pa.int64()),
-            "dot": pa.array(np.concatenate(ds), pa.int64()),
-        },
-        schema=schema,
+            "u": np.concatenate(us),
+            "v": np.concatenate(vs),
+            "dot": np.concatenate(ds),
+        }
     )
 
 
@@ -416,7 +237,7 @@ def _mutual_knn_edges_exact(spark, sf_dir):
     spine, so the Arrow transfer is O(32 n) rows — the previous 1-row
     corpus block crossJoined onto EVERY row shipped O(n) copies of the
     whole corpus (measured 764 s at sf1, ~all serialization). Each
-    group runs the shared _knn_cell_kernel (float64-BLAS exact integer
+    group runs the shared _knn_cell_arrow (float64-BLAS exact integer
     matmul + vectorized top-k); since members = the whole corpus, the
     per-group top-k IS the exact global top-k, and the mutual
     semi-join filter follows. Quadratic compute by definition: fine as
@@ -503,7 +324,7 @@ def _mutual_knn_scored(spark, sf_dir):
     * candidates for u = members of u's probed cells; a (u, v) pair
       can surface in up to `member` cells with the SAME exact dot,
       so one distinct() collapses the duplicates;
-    * per cell, one applyInPandas numpy int64 matmul scores probers
+    * per cell, one applyInArrow float64-BLAS exact matmul scores probers
       against members (the semdedup within-cell BLAS doctrine) and
       keeps each prober's per-cell top-_KNN_K by (-dot, neighbor id);
     * a global per-u window reduces the <= probe * _KNN_K

@@ -37,6 +37,11 @@ from youtube_trending_data_pipeline_spark.catalog_analysis import (  # noqa: F40
     er_blocked_match_score,
     late_event_audit,
 )
+from youtube_trending_data_pipeline_spark.operators.intlinalg import (
+    _exact_sq_l2,
+    _rowwise_topk,
+    _split_group,
+)
 
 # ---------------------------------------------------------------------------
 # Keyword-in-context (KWIC) concordance
@@ -2766,26 +2771,13 @@ def _lloyd_explode(q):
     )
 
 
-def _lloyd_assign_schema():
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    return StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("cid", LongType()),
-            StructField("d2", LongType()),
-            StructField("cell_rank", LongType()),
-        ]
-    )
-
-
-def _lloyd_assign_kernel(pdf, n_keep: int):
+def _lloyd_assign_arrow(tbl, n_keep: int):
     """Salt-group assignment kernel (round 10): exact integer milli-L2
     of every vector to every centroid via ONE BLAS matmul per group —
-    d2 = ||x||² - 2x·c + ||c||², all int64-exact (cross products are
-    <= 64 * (10^7)² = 6.4e15, under the 2^53 matmul precondition; d2
-    itself tops out ~2.6e16, well inside int64). Emits each vector's
-    top-``n_keep`` centroids by (d2 ASC, cid ASC).
+    d2 = ||x||² - 2x·c + ||c||² (_exact_sq_l2), all int64-exact (cross
+    products are <= 64 * (10^7)² = 6.4e15, under the 2^53 matmul
+    precondition; d2 itself tops out ~2.6e16, well inside int64).
+    Emits each vector's top-``n_keep`` centroids by (d2 ASC, cid ASC).
 
     Replaces the per-round exploded-frame join + 101M-row partial hash
     aggregate + ranking window (measured 8-10 s PER ROUND at the 10x
@@ -2793,39 +2785,23 @@ def _lloyd_assign_kernel(pdf, n_keep: int):
     million-entry hash tables dominated); identical values by exact
     integer arithmetic, so the unrolled-CTE oracle is untouched."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from youtube_trending_data_pipeline_spark.operators.intlinalg import (
-        _exact_int_matmul,
-        _rowwise_topk,
-    )
-
-    cents = pdf[pdf["is_cent"]]
-    pros = pdf[~pdf["is_cent"]]
-    if not len(cents) or not len(pros):
-        return pd.DataFrame(
-            {"vec_id": pd.Series(dtype="int64"),
-             "cid": pd.Series(dtype="int64"),
-             "d2": pd.Series(dtype="int64"),
-             "cell_rank": pd.Series(dtype="int64")}
-        )
-    cids = cents["vec_id"].to_numpy(dtype=np.int64)
-    C = np.array(list(cents["arr"]), dtype=np.int64)
-    pids = pros["vec_id"].to_numpy(dtype=np.int64)
-    V = np.array(list(pros["arr"]), dtype=np.int64)
-    X = _exact_int_matmul(V, C)                      # probers x cents
-    p2 = np.einsum("ij,ij->i", V, V)                 # int64-exact norms
-    c2 = np.einsum("ij,ij->i", C, C)
-    D2 = p2[:, None] - 2 * X + c2[None, :]
+    split = _split_group(tbl, "is_cent", vecs="arr")
+    if split is None:
+        return pa.table({})
+    cids, C, pids, P = split
+    D2 = _exact_sq_l2(P, C)
     # top-n_keep by (d2 ASC, cid ASC) == (-d2 DESC, cid ASC)
     cols = _rowwise_topk(-D2, cids, n_keep)
     k = cols.shape[1]
-    return pd.DataFrame(
-        {"vec_id": np.repeat(pids, k),
-         "cid": cids[cols.ravel()],
-         "d2": np.take_along_axis(D2, cols, axis=1).ravel(),
-         "cell_rank": np.tile(np.arange(1, k + 1, dtype=np.int64),
-                              len(pids))}
+    return pa.table(
+        {
+            "vec_id": np.repeat(pids, k),
+            "cid": cids[cols.ravel()],
+            "d2": np.take_along_axis(D2, cols, axis=1).ravel(),
+            "cell_rank": np.tile(np.arange(1, k + 1, dtype=np.int64), len(pids)),
+        }
     )
 
 
@@ -2857,9 +2833,9 @@ def _lloyd_assign(vecs, cent_arr, n_keep: int):
     return (
         probers.unionByName(cents_rep)
         .groupBy("g")
-        .applyInPandas(
-            lambda pdf: _lloyd_assign_kernel(pdf, n_keep),
-            schema=_lloyd_assign_schema(),
+        .applyInArrow(
+            lambda t_: _lloyd_assign_arrow(t_, n_keep),
+            schema="vec_id long, cid long, d2 long, cell_rank long",
         )
     )
 

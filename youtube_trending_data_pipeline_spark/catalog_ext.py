@@ -1570,7 +1570,7 @@ def embedding_quantize_int8(spark, sf_dir):
     "10): the salt-group BLAS kernel — vectors hash into "
     "defaultParallelism groups, the codebook replicates once per "
     "group, one exact-integer matmul per subspace per group "
-    "(operators/similarity._pq_encode_kernel); vectors shuffle once "
+    "(operators/similarity._pq_encode_arrow); vectors shuffle once "
     "and only the 16x-narrower codes frame leaves the kernel. Oracle "
     "replays components exploded to (sub, j, q) integer grids.",
 )

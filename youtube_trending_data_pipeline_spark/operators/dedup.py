@@ -34,6 +34,13 @@ from youtube_trending_data_pipeline_spark.functions.text import (
     word_ngrams,
 )
 from youtube_trending_data_pipeline_spark.functions.vectors import cosine_similarity
+from youtube_trending_data_pipeline_spark.operators.intlinalg import (
+    _exact_int_matmul_blocks,
+    _exact_sq_l2,
+    _list_column,
+    _list_matrix,
+    _split_group,
+)
 
 # Mersenne prime for the affine minhash permutations h_i(x) = (a_i*x+b_i) mod p.
 _MERSENNE_P = (1 << 61) - 1
@@ -713,55 +720,32 @@ _SEMDEDUP_CELL_CAP = 50 * _SEMDEDUP_CELL_SIZE
 _SEMDEDUP_GRAM_BLOCK = 2048
 
 
-def _semdedup_assign_kernel(pdf):
+def _semdedup_assign_arrow(tbl):
     """Cell-assignment kernel (round 9): argmin integer squared-L2 of
     every vector to the seed set, ties to the smaller seed id, via ONE
-    float64-BLAS exact integer matmul per salt group — replacing a
-    crossJoin(broadcast seeds) + interpreted zip_with-d2 HOF +
-    row_number window (the HOF evaluated n * n_cells * dim closures
-    and the window shuffled n * n_cells vector-carrying rows; same fix
-    as the mutual-kNN pivot ranking, catalog_analysis.
-    _pivot_rank_kernel). Seeds sort by id, so numpy's first-minimum
+    float64-BLAS exact integer matmul per salt group (_exact_sq_l2) —
+    replacing a crossJoin(broadcast seeds) + interpreted zip_with-d2
+    HOF + row_number window (the HOF evaluated n * n_cells * dim
+    closures and the window shuffled n * n_cells vector-carrying rows;
+    same fix as the mutual-kNN pivot ranking, catalog_analysis.
+    _pivot_rank_arrow). Seeds sort by id, so numpy's first-minimum
     argmin IS the (d2 ASC, seed_id ASC) tie rule."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    seeds = pdf[pdf["is_seed"]]
-    pros = pdf[~pdf["is_seed"]]
-    if not len(seeds) or not len(pros):
-        return pd.DataFrame(
-            {"_id": pd.Series(dtype="int64"),
-             "cell": pd.Series(dtype="int64"),
-             "_qv": pd.Series(dtype="object")}
-        )
-    order = np.argsort(seeds["_id"].to_numpy(), kind="stable")
-    sids = seeds["_id"].to_numpy(dtype=np.int64)[order]
-    S = np.array(list(seeds["_qv"]), dtype=np.int64)[order]
-    pids = pros["_id"].to_numpy(dtype=np.int64)
-    qvs = list(pros["_qv"])
-    V = np.array(qvs, dtype=np.int64)
-    bound = np.float64(
-        max(np.abs(V).max(initial=0), np.abs(S).max(initial=0))
-    )
-    if bound * bound * V.shape[1] > 2**53:
-        raise ValueError(
-            "semdedup quantized magnitude breaks the exact-dot "
-            "precondition bound^2*dim <= 2^53"
-        )
-    Vf, Sf = V.astype(np.float64), S.astype(np.float64)
-    D = np.rint(Vf @ Sf.T).astype(np.int64)
-    n2v = np.rint((Vf * Vf).sum(axis=1)).astype(np.int64)
-    n2s = np.rint((Sf * Sf).sum(axis=1)).astype(np.int64)
-    d2 = n2v[:, None] + n2s[None, :] - 2 * D
-    j = np.argmin(d2, axis=1)  # first minimum = smallest seed id
-    return pd.DataFrame({"_id": pids, "cell": sids[j], "_qv": qvs})
+    split = _split_group(tbl, "is_seed", ids="_id", vecs="_qv")
+    if split is None:
+        return pa.table({})
+    sids, S, pids, P = split
+    j = np.argmin(_exact_sq_l2(P, S), axis=1)
+    return pa.table({"_id": pids, "cell": sids[j], "_qv": _list_column(P)})
 
 
-def _semdedup_cell_kernel(pdf, p: int, q: int):
+def _semdedup_cell_arrow(tbl, p: int, q: int):
     """Within-cell duplicate-pair kernel: exact integer Gram row-blocks
-    via float64 BLAS (every product <= milli_bound^2*dim << 2^53 — the
-    _exact_int_matmul doctrine, guarded loudly), upper-triangle pairs in
-    id order, the rational cosine-threshold predicate in int64.
+    (_exact_int_matmul_blocks: one exactness guard per cell),
+    upper-triangle pairs in id order, the rational cosine-threshold
+    predicate in int64.
 
     Two loud guards protect the int64 arithmetic end to end:
       * bound^2*dim <= 2^53 — every Gram entry is exact in float64;
@@ -774,153 +758,11 @@ def _semdedup_cell_kernel(pdf, p: int, q: int):
         engines would diverge loudly-vs-silently).
     """
     import numpy as np
-    import pandas as pd
-
-    empty = pd.DataFrame(
-        {"id_a": np.array([], dtype=np.int64),
-         "id_b": np.array([], dtype=np.int64)}
-    )
-    if len(pdf) < 2:
-        return empty
-    n = len(pdf)
-    if n > _SEMDEDUP_CELL_CAP:
-        raise ValueError(
-            f"semdedup cell holds {n} vectors, past the "
-            f"{_SEMDEDUP_CELL_CAP}-member cap — the seed assignment "
-            "skewed far beyond the expected cell size; raise n_cells "
-            "(corpus-relative GREATEST(8, n // 250)) or re-seed"
-        )
-    order = np.argsort(pdf["_id"].to_numpy(), kind="stable")
-    ids = pdf["_id"].to_numpy()[order]
-    Q = np.stack(pdf["_qv"].to_numpy()[order]).astype(np.int64)
-    bound = np.float64(np.abs(Q).max(initial=0))
-    if bound * bound * Q.shape[1] > 2**53:
-        raise ValueError(
-            "semdedup quantized magnitude breaks the exact-Gram "
-            "precondition bound^2*dim <= 2^53"
-        )
-    Qf = Q.astype(np.float64)
-    n2 = np.rint((Qf * Qf).sum(axis=1)).astype(np.int64)
-    n2_max = int(n2.max(initial=0))
-    if q * q * n2_max * n2_max >= 2**63:  # Python ints: cannot wrap
-        raise ValueError(
-            "semdedup predicate headroom exceeded: q^2 * max(|v|^2)^2 "
-            f"= {q * q * n2_max * n2_max} >= 2^63 would wrap int64 in "
-            "q^2*dot^2 >= p^2*na*nb; normalize or re-scale the "
-            "embeddings (milli quantization assumes ~unit range)"
-        )
-    out_a: list = []
-    out_b: list = []
-    cols = np.arange(n)
-    for s in range(0, n - 1, _SEMDEDUP_GRAM_BLOCK):
-        e = min(s + _SEMDEDUP_GRAM_BLOCK, n - 1)
-        Gb = np.rint(Qf[s:e] @ Qf.T).astype(np.int64)
-        rows = np.arange(s, e)
-        bi, bj = np.nonzero(cols[None, :] > rows[:, None])
-        gi, gj = rows[bi], bj
-        dot, na, nb = Gb[bi, bj], n2[gi], n2[gj]
-        ok = (
-            (dot >= 0)
-            & (na > 0)
-            & (nb > 0)
-            & (q * q * dot * dot >= p * p * na * nb)
-        )
-        out_a.append(ids[gi][ok])
-        out_b.append(ids[gj][ok])
-    return pd.DataFrame(
-        {"id_a": np.concatenate(out_a) if out_a else empty["id_a"],
-         "id_b": np.concatenate(out_b) if out_b else empty["id_b"]}
-    )
-
-
-def _semdedup_assign_arrow(tbl):
-    """Arrow-native production form of _semdedup_assign_kernel (r13):
-    identical argmin-L2 assignment on the same integers, but the group
-    crosses the Python boundary as flat Arrow buffers (the mutual-kNN
-    kernel doctrine; pandas twin kept as the test reference)."""
-    import numpy as np
     import pyarrow as pa
 
-    from youtube_trending_data_pipeline_spark.operators.intlinalg import (
-        _list_matrix,
-        _list_offsets_i32,
-    )
-
-    schema = pa.schema(
-        [
-            pa.field("_id", pa.int64()),
-            pa.field("cell", pa.int64()),
-            pa.field("_qv", pa.list_(pa.int32())),
-        ]
-    )
-    n = tbl.num_rows
-    is_seed = (
-        tbl.column("is_seed")
-        .combine_chunks()
-        .to_numpy(zero_copy_only=False)
-        .astype(bool)
-    )
-    ids = tbl.column("_id").combine_chunks().to_numpy(zero_copy_only=False)
-    if not is_seed.any() or is_seed.all():
-        return schema.empty_table()
-    V_all = _list_matrix(tbl.column("_qv"), n)
-    sraw = ids[is_seed]
-    order = np.argsort(sraw, kind="stable")
-    sids = sraw[order]
-    S = V_all[is_seed][order]
-    pids = ids[~is_seed]
-    V = V_all[~is_seed]
-    bound = np.float64(
-        max(np.abs(V).max(initial=0), np.abs(S).max(initial=0))
-    )
-    if bound * bound * V.shape[1] > 2**53:
-        raise ValueError(
-            "semdedup quantized magnitude breaks the exact-dot "
-            "precondition bound^2*dim <= 2^53"
-        )
-    Vf, Sf = V.astype(np.float64), S.astype(np.float64)
-    D = Vf @ Sf.T
-    np.rint(D, out=D)
-    D = D.astype(np.int64)
-    n2v = np.rint((Vf * Vf).sum(axis=1)).astype(np.int64)
-    n2s = np.rint((Sf * Sf).sum(axis=1)).astype(np.int64)
-    d2 = n2v[:, None] + n2s[None, :] - 2 * D
-    j = np.argmin(d2, axis=1)  # first minimum = smallest seed id
-    dim = V.shape[1]
-    qv_vals = V.ravel().astype(np.int32)
-    # int64-safe offsets with a loud 2^31 guard (r14, ADVICE r13)
-    offsets = _list_offsets_i32(len(pids), dim)
-    qv_arr = pa.ListArray.from_arrays(
-        pa.array(offsets, pa.int32()), pa.array(qv_vals, pa.int32())
-    )
-    return pa.table(
-        {
-            "_id": pa.array(pids, pa.int64()),
-            "cell": pa.array(sids[j], pa.int64()),
-            "_qv": qv_arr,
-        },
-        schema=schema,
-    )
-
-
-def _semdedup_cell_arrow(tbl, p: int, q: int):
-    """Arrow-native production form of _semdedup_cell_kernel (r13):
-    same guarded exact-Gram row-blocks and int64 rational predicate,
-    minus the pandas object-column decode. Pandas twin kept for
-    tests; parity pinned in tests/test_properties.py."""
-    import numpy as np
-    import pyarrow as pa
-
-    from youtube_trending_data_pipeline_spark.operators.intlinalg import (
-        _list_matrix,
-    )
-
-    schema = pa.schema(
-        [pa.field("id_a", pa.int64()), pa.field("id_b", pa.int64())]
-    )
     n = tbl.num_rows
     if n < 2:
-        return schema.empty_table()
+        return pa.table({})
     if n > _SEMDEDUP_CELL_CAP:
         raise ValueError(
             f"semdedup cell holds {n} vectors, past the "
@@ -928,20 +770,13 @@ def _semdedup_cell_arrow(tbl, p: int, q: int):
             "skewed far beyond the expected cell size; raise n_cells "
             "(corpus-relative GREATEST(8, n // 250)) or re-seed"
         )
-    ids_raw = tbl.column("_id").combine_chunks().to_numpy(
-        zero_copy_only=False
-    )
-    order = np.argsort(ids_raw, kind="stable")
-    ids = ids_raw[order]
+    ids = tbl.column("_id").combine_chunks().to_numpy(zero_copy_only=False)
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order].astype(np.int64, copy=False)
     Q = _list_matrix(tbl.column("_qv"), n)[order]
-    bound = np.float64(np.abs(Q).max(initial=0))
-    if bound * bound * Q.shape[1] > 2**53:
-        raise ValueError(
-            "semdedup quantized magnitude breaks the exact-Gram "
-            "precondition bound^2*dim <= 2^53"
-        )
-    Qf = Q.astype(np.float64)
-    n2 = np.rint((Qf * Qf).sum(axis=1)).astype(np.int64)
+    # the last row has no upper-triangle partner
+    blocks = _exact_int_matmul_blocks(Q[:n - 1], Q, _SEMDEDUP_GRAM_BLOCK)
+    n2 = np.einsum("ij,ij->i", Q, Q)
     n2_max = int(n2.max(initial=0))
     if q * q * n2_max * n2_max >= 2**63:  # Python ints: cannot wrap
         raise ValueError(
@@ -953,12 +788,8 @@ def _semdedup_cell_arrow(tbl, p: int, q: int):
     out_a: list = []
     out_b: list = []
     cols = np.arange(n)
-    for s in range(0, n - 1, _SEMDEDUP_GRAM_BLOCK):
-        e = min(s + _SEMDEDUP_GRAM_BLOCK, n - 1)
-        Gb = Qf[s:e] @ Qf.T
-        np.rint(Gb, out=Gb)
-        Gb = Gb.astype(np.int64)
-        rows = np.arange(s, e)
+    for s, Gb in blocks:
+        rows = np.arange(s, s + len(Gb))
         bi, bj = np.nonzero(cols[None, :] > rows[:, None])
         gi, gj = rows[bi], bj
         dot, na, nb = Gb[bi, bj], n2[gi], n2[gj]
@@ -970,19 +801,7 @@ def _semdedup_cell_arrow(tbl, p: int, q: int):
         )
         out_a.append(ids[gi][ok])
         out_b.append(ids[gj][ok])
-    return pa.table(
-        {
-            "id_a": pa.array(
-                np.concatenate(out_a) if out_a else np.array([], np.int64),
-                pa.int64(),
-            ),
-            "id_b": pa.array(
-                np.concatenate(out_b) if out_b else np.array([], np.int64),
-                pa.int64(),
-            ),
-        },
-        schema=schema,
-    )
+    return pa.table({"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)})
 
 
 def semdedup_keepers(
@@ -1043,7 +862,7 @@ def semdedup_keepers(
     seeds = qdf.orderBy("_id").limit(n_cells)
     # salt-group argmin-L2 assignment (round 9): one BLAS kernel per
     # salt group instead of crossJoin + interpreted HOF + window — see
-    # _semdedup_assign_kernel; output is a pure function of
+    # _semdedup_assign_arrow; output is a pure function of
     # (_qv, seeds), bit-identical at any parallelism.
     spark = df.sparkSession
     n_salts = spark.sparkContext.defaultParallelism

@@ -1,13 +1,30 @@
-"""Exact integer linear algebra for Arrow kernels.
+"""Exact integer linear algebra for the grouped vector kernels.
 
-Shared by the mutual-kNN candidate build (catalog_analysis), semantic
-dedup (operators/dedup.py), and the IVF retrieval family
-(operators/similarity.py). The doctrine (SCALING.md §4): within-block
-quadratic scoring runs as ONE float64-BLAS matmul whose results are
-still EXACT integers under the guarded ``bound² · dim ≤ 2^53``
-precondition — numpy's int64 ``@`` has no BLAS kernel and is ~100x
-slower, and interpreted per-element closures (Spark HOFs or Python
-loops) are orders of magnitude behind both.
+Every grouped vector kernel is one ``applyInArrow`` adapter over these
+helpers:
+
+* ``_split_group`` decodes an Arrow group into id-sorted seeds and
+  probers (``_list_matrix`` reads the list column off its flat values
+  buffer);
+* ``_exact_int_matmul`` / ``_exact_int_matmul_blocks`` score them, and
+  ``_exact_sq_l2`` turns the dots into squared L2 distances;
+* ``_rowwise_topk`` ranks each row, and ``_list_column`` rebuilds a
+  replicated vector output column.
+
+Callers: the mutual-kNN pivot ranking and cell scoring
+(``catalog_analysis._pivot_rank_arrow`` / ``_knn_cell_arrow``), semantic
+dedup (``operators/dedup.py``: ``_semdedup_assign_arrow``,
+``_semdedup_cell_arrow``), the IVF/PQ family (``operators/similarity.py``:
+``_cell_assign_arrow``, ``_pq_encode_arrow``) and integer Lloyd
+(``catalog_analysis_series._lloyd_assign_arrow``).
+
+The doctrine (SCALING.md §4): within-block quadratic scoring runs as
+ONE float64-BLAS matmul whose results are still EXACT integers under
+the guarded ``bound² · dim ≤ 2^53`` precondition — numpy's int64 ``@``
+has no BLAS kernel and is ~100x slower, and interpreted per-element
+closures (Spark HOFs or Python loops) are orders of magnitude behind
+both. ``_exact_int_matmul_blocks`` holds the package's only check of
+that precondition.
 """
 
 from __future__ import annotations
@@ -15,24 +32,27 @@ from __future__ import annotations
 __all__ = [
     "_SELF_MASK",
     "_exact_int_matmul",
+    "_exact_int_matmul_blocks",
+    "_exact_sq_l2",
+    "_list_column",
     "_list_matrix",
     "_list_offsets_i32",
     "_rowwise_topk",
+    "_split_group",
 ]
 
 
 def _list_matrix(col, n_rows):
     """Arrow list<int> column -> (n_rows, dim) int64 matrix read
     straight off the flattened values buffer — no per-row Python list
-    objects (the applyInPandas object-column path materialized one
-    ndarray per row and re-copied them with np.array(list(...));
-    measured r13: the conversion dominated the 100x mutual-kNN
-    candidate build).
+    objects (the retired applyInPandas object-column path materialized
+    one ndarray per row and re-copied them into a matrix; measured r13:
+    the conversion dominated the 100x mutual-kNN candidate build).
 
     Validates that every list has the SAME length (r14, ADVICE r13):
     the flat reshape would silently misalign a ragged group whose
-    total element count happens to divide n_rows (the pandas
-    np.array(list(...)) path failed loudly as an object array), and an
+    total element count happens to divide n_rows (the retired pandas
+    path failed loudly as an object array), and an
     all-empty group would raise an opaque reshape error.
 
     A NULL element inside a list raises too: numpy would read it as NaN
@@ -152,8 +172,11 @@ def _rowwise_topk(D, ids, k):
     return np.take_along_axis(part, order, axis=1)
 
 
-def _exact_int_matmul(A, B):
-    """EXACT integer dot products via a float64 BLAS matmul.
+def _exact_int_matmul_blocks(A, B, block):
+    """EXACT integer dot products ``A[s:s+block] @ B.T`` via float64
+    BLAS, as an iterator of ``(s, int64 block)`` over row blocks of A
+    (at least one block, so an empty A still yields its (0, n) product).
+    The guard runs and B is converted once, before the first block.
 
     numpy's int64 @ has no BLAS kernel (it is a naive triple loop —
     measured ~380 s for the 20 k x 20 k sf1 exact build); float64 DOES.
@@ -174,8 +197,77 @@ def _exact_int_matmul(A, B):
             "precondition bound^2*dim <= 2^53; re-quantize at a lower "
             "scale" % bound
         )
-    # rint in place on the matmul output (r13): one fewer matrix-sized
-    # temporary per block — see the _rowwise_topk allocation note
-    prod = A.astype(np.float64) @ B.astype(np.float64).T
-    np.rint(prod, out=prod)
-    return prod.astype(np.int64)
+    Bt = B.astype(np.float64).T
+
+    def product(s):
+        # rint in place on the matmul output (r13): one fewer
+        # matrix-sized temporary per block — see _rowwise_topk
+        prod = A[s:s + block].astype(np.float64) @ Bt
+        np.rint(prod, out=prod)
+        return prod.astype(np.int64)
+
+    return ((s, product(s)) for s in range(0, max(len(A), 1), block))
+
+
+def _exact_int_matmul(A, B):
+    """The whole ``A @ B.T`` as one exact int64 block (see
+    _exact_int_matmul_blocks for the guard)."""
+    ((_, D),) = _exact_int_matmul_blocks(A, B, max(len(A), 1))
+    return D
+
+
+def _exact_sq_l2(P, S):
+    """(probers x seeds) EXACT integer squared L2 distances
+    ``|p|^2 - 2 p.s + |s|^2``: the dots through _exact_int_matmul (and
+    its guard), the norms as int64 sums — exact, since each is at most
+    bound^2 * dim <= 2^53."""
+    import numpy as np
+
+    D2 = _exact_int_matmul(P, S)
+    D2 *= -2
+    D2 += np.einsum("ij,ij->i", P, P)[:, None]
+    D2 += np.einsum("ij,ij->i", S, S)[None, :]
+    return D2
+
+
+def _split_group(tbl, seed, probe=None, ids="vec_id", vecs="qv"):
+    """Decode one Arrow group into id-sorted seeds ``(sids, S)`` and
+    probers ``(pids, P)``: the rows whose boolean ``seed`` column is
+    true, and those whose ``probe`` column is true (default: those
+    that are not seeds). Ids come back as int64, vectors as int64
+    matrices (_list_matrix). Returns None when either side is empty;
+    the adapters then return ``pa.table({})``, the column-less empty
+    result applyInArrow accepts.
+
+    Seeds sort by id (stable), so an argmin over seed columns breaks
+    ties to the smallest seed id; _rowwise_topk ranks by id itself and
+    gives the same rows in either order."""
+    import numpy as np
+
+    def mask(name):
+        col = tbl.column(name).combine_chunks()
+        return col.to_numpy(zero_copy_only=False).astype(bool)
+
+    is_s = mask(seed)
+    is_p = ~is_s if probe is None else mask(probe)
+    if not is_s.any() or not is_p.any():
+        return None
+    idv = tbl.column(ids).combine_chunks().to_numpy(zero_copy_only=False)
+    idv = idv.astype(np.int64, copy=False)
+    V = _list_matrix(tbl.column(vecs), tbl.num_rows)
+    order = np.argsort(idv[is_s], kind="stable")
+    return idv[is_s][order], V[is_s][order], idv[is_p], V[is_p]
+
+
+def _list_column(M):
+    """(n, dim) int matrix -> Arrow list<int32> column built as one
+    values buffer plus offsets, not per-row Python lists. Values are
+    int32 transport (the kernels' inputs arrived as int32 or fit it)."""
+    import numpy as np
+    import pyarrow as pa
+
+    n, dim = M.shape
+    return pa.ListArray.from_arrays(
+        pa.array(_list_offsets_i32(n, dim), pa.int32()),
+        pa.array(M.ravel().astype(np.int32), pa.int32()),
+    )

@@ -20,6 +20,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from youtube_trending_data_pipeline_spark.functions.vectors import cosine_similarity
+from youtube_trending_data_pipeline_spark.operators.intlinalg import (
+    _exact_int_matmul,
+    _exact_sq_l2,
+    _rowwise_topk,
+    _split_group,
+)
 
 # Quantization scale for hyperplane dot products: each elementwise product
 # is rounded to an integer number of 1e-9 units, so the per-plane dot is an
@@ -91,55 +97,30 @@ def _quantize_expr(vec_col: str):
     )
 
 
-def _cell_assign_schema():
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    return StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("cell", LongType()),
-            StructField("cell_rank", LongType()),
-        ]
-    )
-
-
-def _cell_assign_kernel(pdf, n_keep: int):
+def _cell_assign_arrow(tbl, n_keep: int):
     """Salt-group kernel: rank every non-seed row's cells by (exact
     integer dot DESC, seed id ASC) with one float64-BLAS matmul and
     emit its top-``n_keep`` (vec_id, cell, cell_rank) rows — the
-    catalog_analysis._pivot_rank_kernel doctrine applied to the IVF
+    catalog_analysis._pivot_rank_arrow doctrine applied to the IVF
     retrieval family (round 10: with corpus-relative cells, the old
     crossJoin + interpreted-HOF cosine + row_number window evaluated
     n * cells * dim closures and shuffled n * cells vector-carrying
     rows — measured 23x wall at the 10x replica)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from youtube_trending_data_pipeline_spark.operators.intlinalg import (
-        _exact_int_matmul,
-        _rowwise_topk,
-    )
-
-    seeds = pdf[pdf["is_seed"]]
-    pros = pdf[~pdf["is_seed"]]
-    if not len(seeds) or not len(pros):
-        return pd.DataFrame(
-            {"vec_id": pd.Series(dtype="int64"),
-             "cell": pd.Series(dtype="int64"),
-             "cell_rank": pd.Series(dtype="int64")}
-        )
-    sids = seeds["vec_id"].to_numpy(dtype=np.int64)
-    S = np.array(list(seeds["qv"]), dtype=np.int64)
-    pids = pros["vec_id"].to_numpy(dtype=np.int64)
-    V = np.array(list(pros["qv"]), dtype=np.int64)
-    D = _exact_int_matmul(V, S)  # probers x seeds
-    cols = _rowwise_topk(D, sids, n_keep)
+    split = _split_group(tbl, "is_seed")
+    if split is None:
+        return pa.table({})
+    sids, S, pids, P = split
+    cols = _rowwise_topk(_exact_int_matmul(P, S), sids, n_keep)
     k = cols.shape[1]
-    return pd.DataFrame(
-        {"vec_id": np.repeat(pids, k),
-         "cell": sids[cols.ravel()],
-         "cell_rank": np.tile(np.arange(1, k + 1, dtype=np.int64),
-                              len(pids))}
+    return pa.table(
+        {
+            "vec_id": np.repeat(pids, k),
+            "cell": sids[cols.ravel()],
+            "cell_rank": np.tile(np.arange(1, k + 1, dtype=np.int64), len(pids)),
+        }
     )
 
 
@@ -183,9 +164,9 @@ def assign_pivot_cells(
     return (
         probers.unionByName(seeds_rep)
         .groupBy("g")
-        .applyInPandas(
-            lambda pdf: _cell_assign_kernel(pdf, n_keep),
-            schema=_cell_assign_schema(),
+        .applyInArrow(
+            lambda t_: _cell_assign_arrow(t_, n_keep),
+            schema="vec_id long, cell long, cell_rank long",
         )
     )
 
@@ -902,8 +883,8 @@ def pq_encode(
     out = (
         probers.unionByName(seeds_rep)
         .groupBy("g")
-        .applyInPandas(
-            lambda pdf: _pq_encode_kernel(pdf, m, d_sub),
+        .applyInArrow(
+            lambda t_: _pq_encode_arrow(t_, m, d_sub),
             schema="vec_id long, sub int, code long, dist_q long",
         )
     )
@@ -912,51 +893,38 @@ def pq_encode(
     )
 
 
-def _pq_encode_kernel(pdf, m: int, d_sub: int):
+def _pq_encode_arrow(tbl, m: int, d_sub: int):
     """Salt-group PQ encoding kernel: per subspace, one exact-integer
-    BLAS matmul against the id-sorted codebook; argmin squared L2 with
-    ties to the smallest centroid id (numpy argmin returns the FIRST
-    minimum, and codewords are processed in ascending id order, so the
+    squared-L2 matmul (_exact_sq_l2) against the id-sorted codebook;
+    argmin with ties to the smallest centroid id (numpy argmin returns
+    the FIRST minimum, and codewords are in ascending id order, so the
     tie-break is structural). All arithmetic on the 1e-4 integer grid:
     values identical to the packed-long aggregate this replaces and to
-    the oracle's (sub, j, q) grid replay."""
+    the oracle's (sub, j, q) grid replay. Rows come out subspace-major:
+    every prober's sub-0 code, then sub 1, ..."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from youtube_trending_data_pipeline_spark.operators.intlinalg import (
-        _exact_int_matmul,
-    )
-
-    seeds = pdf[pdf["is_seed"]]
-    pros = pdf[~pdf["is_seed"]]
-    if not len(seeds) or not len(pros):
-        return pd.DataFrame(
-            {"vec_id": pd.Series(dtype="int64"),
-             "sub": pd.Series(dtype="int32"),
-             "code": pd.Series(dtype="int64"),
-             "dist_q": pd.Series(dtype="int64")}
-        )
-    order = np.argsort(seeds["vec_id"].to_numpy(), kind="stable")
-    cids = seeds["vec_id"].to_numpy(dtype=np.int64)[order]
-    C = np.array(list(seeds["qv"]), dtype=np.int64)[order]
-    pids = pros["vec_id"].to_numpy(dtype=np.int64)
-    V = np.array(list(pros["qv"]), dtype=np.int64)
-    frames = []
+    split = _split_group(tbl, "is_seed")
+    if split is None:
+        return pa.table({})
+    cids, C, pids, P = split
+    rows = np.arange(len(pids))
+    codes, dists = [], []
     for s in range(m):
-        Vs = V[:, s * d_sub:(s + 1) * d_sub]
-        Cs = C[:, s * d_sub:(s + 1) * d_sub]
-        X = _exact_int_matmul(Vs, Cs)
-        v2 = np.einsum("ij,ij->i", Vs, Vs)
-        c2 = np.einsum("ij,ij->i", Cs, Cs)
-        D2 = v2[:, None] - 2 * X + c2[None, :]
+        sub = slice(s * d_sub, (s + 1) * d_sub)
+        D2 = _exact_sq_l2(P[:, sub], C[:, sub])
         idx = np.argmin(D2, axis=1)
-        frames.append(pd.DataFrame(
-            {"vec_id": pids,
-             "sub": np.full(len(pids), s, dtype=np.int32),
-             "code": cids[idx],
-             "dist_q": D2[np.arange(len(pids)), idx]}
-        ))
-    return pd.concat(frames, ignore_index=True)
+        codes.append(cids[idx])
+        dists.append(D2[rows, idx])
+    return pa.table(
+        {
+            "vec_id": np.tile(pids, m),
+            "sub": np.repeat(np.arange(m, dtype=np.int32), len(pids)),
+            "code": np.concatenate(codes),
+            "dist_q": np.concatenate(dists),
+        }
+    )
 
 
 def pq_adc_topk(
@@ -1239,8 +1207,8 @@ def _residual_index(
     codes = (
         probers.unionByName(cb_rep)
         .groupBy("g")
-        .applyInPandas(
-            lambda pdf: _pq_encode_kernel(pdf, m, d_sub),
+        .applyInArrow(
+            lambda t_: _pq_encode_arrow(t_, m, d_sub),
             schema="vec_id long, sub int, code long, dist_q long",
         )
         .select(F.col("vec_id").alias("neighbor_id"), "sub", "code")
